@@ -27,8 +27,8 @@ standard IVF operational trade — FAISS retrains on the same signal).
 ``list_occupancy`` exposes the skew metric; rebuild with
 ``build_ann_index`` when its max/mean ratio drifts past policy.
 
-Deletes are TOMBSTONES — the exact mutation contract of the BM25 index
-(``incremental_retrieval.delete_docs``): :func:`delete_vectors` appends
+Deletes are TOMBSTONES — the lifecycle all three persisted indexes
+share, kept once in ``index_maint``: :func:`delete_vectors` appends
 ids to ``<table>__deleted`` and every query anti-joins them out, so a
 delete is O(ids) however large the lists (physically rewriting would
 touch the cid partition each vector lives in — for a retraction stream
@@ -47,19 +47,20 @@ from pyspark.sql import functions as F
 
 from ..functions.scalars import round_half_up
 from ..functions.vectors import cosine
-from ..materialize import materialize
 from ..sinks.warehouse import ParquetWarehouse
-from .index_maint import log_maintenance
+from .index_maint import (
+    delete_ids,
+    fold_deletes,
+    live_rows,
+    log_maintenance,
+    occupancy,
+)
 from .similarity import ivf_assign, kmeans_refine, l2sq
 from .skew import salted_topk
 
 
 def _centroids_table(table: str) -> str:
     return f"{table}__centroids"
-
-
-def _deleted_table(table: str) -> str:
-    return f"{table}__deleted"
 
 
 def build_ann_index(
@@ -119,7 +120,7 @@ def ingest_vectors(
     # index) — without this anti-join the merge would rewrite a row the
     # query path anti-joins out anyway, paying a partition rewrite for
     # a vector that stays invisible
-    live_batch = _not_deleted(wh, table, batch, id_col)
+    live_batch = live_rows(wh, table, batch, id_col)
     # same list co-location as the build write (see build_ann_index)
     assigned = ivf_assign(live_batch, cent, vec_col, id_col).repartition("cid")
     wh.merge(assigned, table, keys=("cid", "vec_id"), partition_by=("cid",))
@@ -165,7 +166,7 @@ def ann_query(
     probed_cids = [r["cid"] for r in qc.select("cid").distinct().collect()]
     # tombstones anti-join out on the already-pruned probe slice, not
     # the whole index (the bm25_query discipline)
-    index = _not_deleted(
+    index = live_rows(
         wh, table, wh.read(table).filter(F.col("cid").isin(probed_cids)), "vec_id"
     )
     cand = index.join(F.broadcast(qc), "cid").filter(
@@ -182,85 +183,37 @@ def ann_query(
 def delete_vectors(
     wh: ParquetWarehouse, vec_ids, table: str = "ann_index"
 ) -> None:
-    """Delete vectors from the index as TOMBSTONES — the BM25 index's
-    ``delete_docs`` contract verbatim (incremental_retrieval.py): ids
-    append to ``__deleted`` and every query anti-joins them out, so a
-    delete is O(ids) however large the lists. Idempotent by
-    construction (duplicate tombstones change nothing). ``vec_ids`` is
-    a 1-column DataFrame or an iterable of ids. A tombstoned id stays
-    dead to both queries and re-ingest until :func:`apply_deletes`
-    physically drops it — delete-then-reinsert of CHANGED content is
-    apply_deletes-then-ingest (the shared immutable-id contract)."""
-    if not isinstance(vec_ids, DataFrame):
-        spark = wh.read(_centroids_table(table)).sparkSession
-        vec_ids = spark.createDataFrame(
-            [(int(i),) for i in vec_ids], "vec_id long"
-        )
-    ids = vec_ids.select(F.col(vec_ids.columns[0]).alias("vec_id")).filter(
-        F.when(
-            F.col("vec_id").isNull(),
-            F.raise_error(F.lit("ann index: NULL vec_id tombstone")).cast(
-                "boolean"
-            ),
-        ).otherwise(F.lit(True))
-    )
-    if wh.exists(_deleted_table(table)):
-        wh.append(ids, _deleted_table(table))
-    else:
-        wh.overwrite(ids, _deleted_table(table))
-
-
-def _not_deleted(
-    wh: ParquetWarehouse, table: str, df: DataFrame, id_col: str
-) -> DataFrame:
-    """Anti-join the tombstone set out of any frame carrying vector ids."""
-    if not wh.exists(_deleted_table(table)):
-        return df
-    dead = wh.read(_deleted_table(table)).select("vec_id").distinct()
-    return df.join(
-        dead, df[id_col] == dead["vec_id"], "left_anti"
-    )
+    """Delete vectors from the index as TOMBSTONES
+    (index_maint.delete_ids): O(ids) however large the lists,
+    idempotent, ``vec_ids`` a 1-column DataFrame or an iterable of ids.
+    A tombstoned id stays dead to both queries and re-ingest until
+    :func:`apply_deletes` physically drops it."""
+    delete_ids(wh, vec_ids, table, "vec_id", "ann")
 
 
 def apply_deletes(wh: ParquetWarehouse, table: str = "ann_index") -> None:
     """Compaction: physically drop tombstoned vectors from the inverted
     lists, preserving the cid hive layout (so probe-time static
     partition pruning survives the rewrite), then clear the tombstones.
-    Afterwards a previously deleted id may be re-ingested as a new
-    vector. Centroids are untouched — they were trained on the corpus
-    as it stood at build time, and retraining is ``build_ann_index``'s
-    job when ``list_occupancy`` says so."""
-    if not wh.exists(_deleted_table(table)):
-        return
-    live = materialize(
-        _not_deleted(wh, table, wh.read(table), "vec_id").repartition("cid")
-    )
-    wh.overwrite(live, table, partition_by=("cid",))
-    wh.drop(_deleted_table(table))
+    Centroids are untouched — they were trained on the corpus as it
+    stood at build time, and retraining is ``build_ann_index``'s job
+    when ``list_occupancy`` says so."""
+    fold_deletes(wh, table, "vec_id", ((table, "cid"),))
 
 
 def list_occupancy(
     wh: ParquetWarehouse, table: str = "ann_index", live: bool = False
 ) -> DataFrame:
     """Per-list row counts plus the global max/mean skew ratio — the
-    rebuild trigger metric. One partial-aggregating pass over the
-    (skinny) index. ``live=True`` anti-joins tombstones first: the
-    recall-drift policy should see the lists queries actually probe,
-    while the default physical count is the storage/compaction view
-    (a heavily tombstoned list is a reason to run apply_deletes, not
-    to retrain)."""
+    rebuild trigger metric. ``live=True`` anti-joins tombstones first:
+    the recall-drift policy should see the lists queries actually
+    probe, while the default physical count is the storage/compaction
+    view (a heavily tombstoned list is a reason to run apply_deletes,
+    not to retrain)."""
     index = wh.read(table)
     if live:
-        index = _not_deleted(wh, table, index, "vec_id")
-    counts = index.groupBy("cid").agg(F.count(F.lit(1)).alias("n_vecs"))
-    stats = counts.agg(
-        F.max("n_vecs").alias("_mx"), F.avg("n_vecs").alias("_mean")
-    )
-    return counts.crossJoin(F.broadcast(stats)).select(
-        "cid",
-        "n_vecs",
-        (F.col("_mx") / F.col("_mean")).alias("skew_ratio"),
-    )
+        index = live_rows(wh, table, index, "vec_id")
+    return occupancy(index, "cid", "n_vecs")
 
 
 def maintain_ann_index(

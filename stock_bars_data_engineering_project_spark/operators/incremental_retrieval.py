@@ -36,14 +36,18 @@ Warehouse tables (``table`` = the index name):
   F.avg over the same rows agrees to the ulp absorbed by the ranking
   round).
 
+The lifecycle — table names, the NULL-id guard, tombstones
+(:func:`delete_docs` / :func:`apply_deletes`), occupancy, the
+build/ingest write order and the re-bucketing rebuild — lives once in
+``index_maint``, shared with the trigram and ANN indexes; this module
+keeps the batch postings/doc-length frames and :func:`bm25_query`.
+
 Crash consistency: an ingest commits postings first, then ``__docs``.
 A crash between the two leaves orphan postings whose doc is not yet a
 member — redelivery (anti-join sees no membership) appends the same
 postings again and then the docs rows; the query path deduplicates
 postings on their full row (tf/dl are deterministic per doc, so the
-duplicates are identical), which heals the overlap exactly. NULL doc
-ids are rejected loudly — they can neither be replay-deduped nor
-counted.
+duplicates are identical), which heals the overlap exactly.
 
 Equivalence contract: tf/dl/df are per-doc or per-token integer counts
 — batch-invariant — so ``bm25_query`` over a built+ingested index
@@ -58,31 +62,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_bucket48
-from ..materialize import materialize
 from ..sinks.warehouse import ParquetWarehouse
-from .index_maint import maintain_bucketed_index, postings_table, read_meta
+from .index_maint import (
+    bucket_occupancy,
+    build_bucketed_index,
+    delete_ids,
+    docs_table,
+    fold_bucketed_deletes,
+    ingest_bucketed,
+    live_rows,
+    maintain_bucketed_index,
+    postings_table,
+    read_meta,
+)
 from .retrieval import _term_counts, score_topk
-
-
-def _postings_table(table: str, gen: int = 0) -> str:
-    """Generation-addressed postings name — the atomic-rebuild pointer
-    protocol shared with the trigram index (operators/index_maint.py,
-    where the addressing, policy loop, and orphan sweep live once)."""
-    return postings_table(table, gen)
-
-
-def _meta(wh: ParquetWarehouse, table: str) -> tuple[int, int]:
-    """(n_buckets, postings_gen) — index_maint.read_meta on this
-    index's ``__meta`` table."""
-    return read_meta(wh, _meta_table(table))
-
-
-def _docs_table(table: str) -> str:
-    return f"{table}__docs"
-
-
-def _meta_table(table: str) -> str:
-    return f"{table}__meta"
 
 
 def _batch_postings(
@@ -112,21 +105,7 @@ def _batch_doc_stats(
     dl = F.size(
         F.filter(tokens(F.lower(F.col(text_col))), lambda t: t != F.lit(""))
     )
-    # loud NULL-id guard (md5_bucket48's documented caller obligation,
-    # and the replay anti-join can never match a NULL): a filter-borne
-    # raise_error survives any downstream projection
-    guarded = batch.filter(
-        F.when(
-            F.col(id_col).isNull(),
-            F.raise_error(
-                F.lit(
-                    f"bm25 index: NULL {id_col} — ids must be non-NULL for "
-                    "replay-idempotent ingest"
-                )
-            ).cast("boolean"),
-        ).otherwise(F.lit(True))
-    )
-    return guarded.select(F.col(id_col).alias("doc_id"), dl.alias("dl"))
+    return batch.select(F.col(id_col).alias("doc_id"), dl.alias("dl"))
 
 
 def build_bm25_index(
@@ -140,39 +119,17 @@ def build_bm25_index(
     """Materialize the index from scratch: one tokenize+count pass for
     the postings plus one skinny doc-length pass (zero-token docs have
     no postings rows but must still be members, so __docs cannot be
-    derived from the postings)."""
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    spark = docs.sparkSession
-    # The postings and __docs writes are independent jobs over the same
-    # input, so a fresh build overlaps them (guide §2.6) — ``__meta``
-    # commits LAST as the publish barrier: every reader resolves the
-    # index through read_meta, so a crash before the meta write leaves
-    # an unpublished directory a rebuild simply overwrites. (The
-    # postings-before-membership ordering contract applies to INGEST,
-    # where membership already published by a prior commit gates the
-    # replay anti-join; a from-scratch build has no reader until meta.)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_post = pool.submit(
-            wh.overwrite,
-            _batch_postings(docs, n_buckets, id_col, text_col),
-            _postings_table(table),
-            partition_by=("bkt",),
-        )
-        f_docs = pool.submit(
-            wh.overwrite,
-            _batch_doc_stats(docs, id_col, text_col),
-            _docs_table(table),
-        )
-        f_post.result()
-        f_docs.result()
-    wh.overwrite(
-        spark.createDataFrame(
-            [(n_buckets, 0)], "n_buckets int, postings_gen int"
-        ),
-        _meta_table(table),
+    derived from the postings). index_maint.build_bucketed_index owns
+    the write order."""
+    build_bucketed_index(
+        wh,
+        table,
+        docs,
+        n_buckets,
+        id_col,
+        "bm25",
+        lambda b, n: _batch_postings(b, n, id_col, text_col),
+        lambda b: _batch_doc_stats(b, id_col, text_col),
     )
 
 
@@ -183,34 +140,21 @@ def ingest_docs(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> int:
-    """Fold a new document batch into the index at O(batch) cost:
-    already-indexed doc_ids anti-join away first (an at-least-once
-    redelivery of a COMMITTED batch therefore appends nothing — the
-    exactly-once-by-idempotence discipline of
-    incremental_dedup.ingest_batch), then the survivors' postings and
-    membership rows APPEND, postings first (see the module docstring's
-    crash-consistency contract: a crash between the two appends is
-    healed by redelivery plus the query path's full-row dedup; corpus
-    scalars are derived from __docs at query time, so there is no
-    scalar state to drift). Returns the number of newly indexed
-    documents. Documents are immutable under their id (the
-    index-module contract shared with incremental_ann): re-ingesting a
-    changed text under an old id is ignored, not merged."""
-    n_buckets, gen = _meta(wh, table)
-    known = wh.read(_docs_table(table)).select("doc_id")
-    new_docs = materialize(
-        batch.join(known, batch[id_col] == known["doc_id"], "left_anti")
-    )  # consumed three times below; anti-join runs once
-    doc_stats = _batch_doc_stats(new_docs, id_col, text_col)
-    n_new = int(doc_stats.agg(F.count(F.lit(1)).alias("n")).collect()[0].n)
-    if n_new == 0:
-        return 0
-    wh.append(
-        _batch_postings(new_docs, n_buckets, id_col, text_col),
-        _postings_table(table, gen),
+    """Fold a new document batch into the index at O(batch) cost
+    (index_maint.ingest_bucketed: known ids anti-join away, postings
+    append before membership). Corpus scalars are derived from __docs
+    at query time, so there is no scalar state to drift. Returns the
+    number of newly indexed documents; re-ingesting a changed text
+    under an old id is ignored, not merged."""
+    return ingest_bucketed(
+        wh,
+        table,
+        batch,
+        id_col,
+        "bm25",
+        lambda b, n: _batch_postings(b, n, id_col, text_col),
+        lambda b: _batch_doc_stats(b, id_col, text_col),
     )
-    wh.append(doc_stats, _docs_table(table))
-    return n_new
 
 
 def bm25_query(
@@ -235,7 +179,7 @@ def bm25_query(
         raise ValueError(f"k must be positive, got {k}")
     if k1 < 0 or not 0 <= b <= 1:
         raise ValueError(f"need k1 >= 0 and 0 <= b <= 1, got k1={k1}, b={b}")
-    n_buckets, gen = _meta(wh, table)
+    n_buckets, gen = read_meta(wh, table)
 
     # ONE driver job for the whole query side (round-10 opt): collect
     # the (query_id, token) pairs — query-set-sized by module contract
@@ -278,10 +222,10 @@ def bm25_query(
         [(t,) for t in sorted({t for _, t in qrows})],
         T.StructType([T.StructField("token", T.StringType())]),
     )
-    postings = _live(
+    postings = live_rows(
         wh,
         table,
-        wh.read(_postings_table(table, gen))
+        wh.read(postings_table(table, gen))
         .filter(F.col("bkt").isin(probe_bkts))
         .join(F.broadcast(qvocab), "token", "left_semi")
         # full-row dedup: heals the duplicated postings a crashed-and-
@@ -289,6 +233,7 @@ def bm25_query(
         # per doc, so duplicates are identical rows); runs on the
         # already-pruned probe slice, not the corpus
         .dropDuplicates(["token", "doc_id"]),
+        "doc_id",
     )
     dfreq = postings.groupBy("token").agg(
         F.countDistinct("doc_id").alias("df")
@@ -299,7 +244,7 @@ def bm25_query(
     # the same rows to the ulp the ranking round absorbs (NULL-text
     # docs have NULL dl — skipped by sum/count(dl), counted by n_docs —
     # on both paths)
-    stats = _live(wh, table, wh.read(_docs_table(table))).agg(
+    stats = live_rows(wh, table, wh.read(docs_table(table)), "doc_id").agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         (F.sum("dl") / F.count("dl")).alias("avgdl"),
     )
@@ -313,100 +258,29 @@ def index_occupancy(
     wh: ParquetWarehouse, table: str = "bm25_index", live: bool = False
 ) -> DataFrame:
     """Per-bucket posting counts plus the global max/mean skew ratio —
-    the rebuild/re-bucket trigger metric (incremental_ann's
-    list_occupancy for the lexical index: a Zipf-head token inflating
-    one bucket makes that bucket's probe cost the index's worst case).
-    One partial-aggregating pass over the skinny postings.
+    the re-bucket trigger metric: a Zipf-head token inflating one
+    bucket makes that bucket's probe cost the index's worst case.
     ``live=True`` anti-joins tombstones first (probe-cost view); the
-    physical default is the storage/compaction view — occupancy parity
-    across all three persisted indexes (round 9)."""
-    postings = wh.read(_postings_table(table, _meta(wh, table)[1]))
-    if live:
-        postings = _live(wh, table, postings)
-    counts = postings.groupBy("bkt").agg(
-        F.count(F.lit(1)).alias("n_postings")
-    )
-    stats = counts.agg(
-        F.max("n_postings").alias("_mx"), F.avg("n_postings").alias("_mean")
-    )
-    return counts.crossJoin(F.broadcast(stats)).select(
-        "bkt",
-        "n_postings",
-        (F.col("_mx") / F.col("_mean")).alias("skew_ratio"),
-    )
-
-
-def _deleted_table(table: str) -> str:
-    return f"{table}__deleted"
+    physical default is the storage/compaction view."""
+    return bucket_occupancy(wh, table, live)
 
 
 def delete_docs(
     wh: ParquetWarehouse, doc_ids, table: str = "bm25_index"
 ) -> None:
-    """Delete documents from the index as TOMBSTONES: the ids append to
-    ``__deleted`` and every query anti-joins them out (postings,
-    membership, and the corpus scalars all exclude tombstoned docs), so
-    a delete is O(ids) however large the index — physically rewriting
-    the postings would touch every bucket partition the doc's tokens
-    hash into, which for ordinary text is most of them.
-    :func:`apply_deletes` folds tombstones into the files at
-    compaction. Idempotent by construction (duplicate tombstones
-    change nothing). ``doc_ids`` is a 1-column DataFrame or an iterable
-    of ids. A tombstoned id stays dead to both queries and re-ingest
-    until apply_deletes physically drops it — delete-then-reinsert of
-    CHANGED content is apply_deletes-then-ingest (the immutable-id
-    contract shared with incremental_ann)."""
-    if not isinstance(doc_ids, DataFrame):
-        spark = wh.read(_meta_table(table)).sparkSession
-        doc_ids = spark.createDataFrame(
-            [(int(i),) for i in doc_ids], "doc_id long"
-        )
-    ids = doc_ids.select(F.col(doc_ids.columns[0]).alias("doc_id")).filter(
-        F.when(
-            F.col("doc_id").isNull(),
-            F.raise_error(F.lit("bm25 index: NULL doc_id tombstone")).cast(
-                "boolean"
-            ),
-        ).otherwise(F.lit(True))
-    )
-    if wh.exists(_deleted_table(table)):
-        wh.append(ids, _deleted_table(table))
-    else:
-        wh.overwrite(ids, _deleted_table(table))
-
-
-def _live(wh: ParquetWarehouse, table: str, df: DataFrame) -> DataFrame:
-    """Anti-join the tombstone set out of any frame carrying doc_id."""
-    if not wh.exists(_deleted_table(table)):
-        return df
-    dead = wh.read(_deleted_table(table)).select("doc_id").distinct()
-    return df.join(dead, "doc_id", "left_anti")
+    """Delete documents as TOMBSTONES (index_maint.delete_ids): every
+    query anti-joins them out of postings, membership and the corpus
+    scalars, so a delete is O(ids) — physically rewriting the postings
+    would touch most bucket partitions for ordinary text. Idempotent;
+    ``doc_ids`` is a 1-column DataFrame or an iterable of ids.
+    Delete-then-reinsert of CHANGED content is apply_deletes-then-ingest."""
+    delete_ids(wh, doc_ids, table, "doc_id", "bm25")
 
 
 def apply_deletes(wh: ParquetWarehouse, table: str = "bm25_index") -> None:
     """Compaction: physically drop tombstoned docs from the postings
-    and membership tables, then clear the tombstones. Run at the same
-    delivery barrier as any compaction; afterwards a previously deleted
-    id may be re-ingested as a new document."""
-    if not wh.exists(_deleted_table(table)):
-        return
-    gen = _meta(wh, table)[1]
-    # bkt hive layout preserved (+ list co-location against small
-    # files), so probe-time static partition pruning survives the
-    # compaction rewrite — the ann apply_deletes discipline
-    wh.overwrite(
-        materialize(
-            _live(wh, table, wh.read(_postings_table(table, gen)))
-            .repartition("bkt")
-        ),
-        _postings_table(table, gen),
-        partition_by=("bkt",),
-    )
-    wh.overwrite(
-        materialize(_live(wh, table, wh.read(_docs_table(table)))),
-        _docs_table(table),
-    )
-    wh.drop(_deleted_table(table))
+    (bkt layout preserved) and membership, then clear the tombstones."""
+    fold_bucketed_deletes(wh, table)
 
 
 def maintain_bm25_index(
@@ -415,37 +289,22 @@ def maintain_bm25_index(
     max_skew: float = 4.0,
     rebucket_factor: int = 2,
 ) -> dict:
-    """The index lifecycle's maintenance policy in one call — the port
-    of ``incremental_ann.maintain_ann_index`` (round-9) to the lexical
-    index, same three-step contract:
-
-    1. fold tombstones into the files (:func:`apply_deletes` — always;
-       no-op without tombstones, and a heavily tombstoned index both
-       wastes probe work and skews the occupancy signal);
-    2. read the LIVE bucket skew (:func:`index_occupancy`);
-    3. past ``max_skew``, REBUILD — for a lexical index that means
-       RE-BUCKETING: tokens re-hash into ``rebucket_factor`` × more
-       buckets, splitting colliding-token hotspots. (A single Zipf-head
-       token's posting list is irreducible by any bucketing — that cost
-       is the token's document frequency, not a maintenance defect.)
+    """The index lifecycle's maintenance policy in one call
+    (index_maint.maintain_bucketed_index): fold tombstones, read the
+    bucket skew, and past ``max_skew`` RE-BUCKET — tokens re-hash into
+    ``rebucket_factor`` × more buckets, splitting colliding-token
+    hotspots. (A single Zipf-head token's posting list is irreducible
+    by any bucketing — that cost is the token's document frequency, not
+    a maintenance defect.)
 
     Unlike the ANN rebuild (new centroids change list membership and
     repair recall), re-bucketing is ANSWER-PRESERVING by construction:
-    bucket ids never enter scoring, only pruning. The rebuild is also
-    CRASH-ATOMIC, which the ANN centroids→lists window is not: the
-    re-bucketed postings are written COLD to the next generation table
-    (``__postings_g{n}`` — no reader resolves it), and the ONE
-    ``__meta`` snapshot swap publishes (new n_buckets, new generation)
-    together. A crash before the swap leaves every reader on the old
-    generation, fully consistent; the orphan generation is swept by the
-    next maintenance call. Returns ``{"skew_ratio", "rebuilt",
-    "n_buckets"}`` for run-logging."""
+    bucket ids never enter scoring, only pruning. It is also
+    CRASH-ATOMIC via the ``__meta`` generation pointer. Returns
+    ``{"skew_ratio", "rebuilt", "n_buckets"}`` for run-logging."""
     return maintain_bucketed_index(
         wh,
         table,
-        _meta_table(table),
-        apply_deletes_fn=apply_deletes,
-        occupancy_fn=index_occupancy,
         hash_col="token",
         carry_cols=("token", "doc_id", "tf", "dl"),
         max_skew=max_skew,

@@ -1,37 +1,73 @@
-"""Shared maintenance machinery for the persisted indexes.
+"""The persisted-index lifecycle, kept once for all three indexes.
 
-The three index modules (``incremental_ann``, ``incremental_retrieval``,
-``incremental_trgm``) share one lifecycle contract — O(batch) ingest,
-O(ids) tombstones, fold-read-rebuild maintenance. The ANN rebuild is
-geometric (retrain the quantizer) and stays in its module; the two
-LEXICAL rebuilds are the SAME operation — re-hash postings into
-factor× more buckets and publish atomically via the ``__meta``
-generation pointer — so the generation addressing, the policy loop,
-and the orphan sweep live here once (round-10 review: the two modules
-had byte-identical 80-line copies that had to evolve in lockstep).
+The ANN (``incremental_ann``), BM25 (``incremental_retrieval``) and
+trigram (``incremental_trgm``) indexes share one maintenance contract:
+O(batch) ingest, O(ids) tombstones, fold-read-rebuild maintenance.
+Each index module keeps only what is its own — the batch postings and
+membership frames, the query, and (ANN) the quantizer — and calls the
+operators here for everything else:
 
-Atomic-publish protocol (shared wording of both module docstrings):
-generation 0 is the plain ``<table>__postings``; a rebuild writes
-generation g+1 COLD under ``<table>__postings_g{g+1}`` — no reader
-resolves it — and ONE ``__meta`` snapshot swap publishes
-(n_buckets, postings_gen) together. A crash before the swap leaves
-every reader on the old generation, fully consistent; orphan
-generations are swept by the next maintenance call. Re-bucketing is
-answer-preserving by construction: bucket ids prune, never score.
+- table names: ``<table>__meta``, ``<table>__docs``,
+  ``<table>__deleted``, ``<table>__postings[_g<n>]``;
+- the NULL-id guard (a filter-borne ``raise_error``, so it survives any
+  downstream projection — NULL ids can neither be replay-deduped nor
+  tombstoned);
+- tombstones: :func:`delete_ids` appends ids to ``__deleted``,
+  :func:`live_rows` anti-joins them out of any frame, and
+  :func:`fold_deletes` drops them physically (hive layout preserved)
+  and clears ``__deleted``. A tombstoned id stays dead to queries and
+  re-ingest until the fold; duplicate tombstones change nothing;
+- :func:`occupancy`, the per-partition count plus max/mean skew ratio
+  every maintenance policy reads;
+- the bucketed (lexical) build — postings and membership written in
+  parallel, ``__meta`` last as the publish barrier — and ingest —
+  anti-join known ids, then postings before membership, so a crash
+  between the two leaves orphan postings that redelivery re-appends
+  and the queries' full-row dedup heals.
+
+The ANN rebuild is geometric (retrain the quantizer) and stays in its
+module; the two lexical rebuilds are the same operation — re-hash
+postings into factor× more buckets and publish atomically via the
+``__meta`` generation pointer — so :func:`maintain_bucketed_index`
+serves both.
+
+Atomic-publish protocol: generation 0 is the plain
+``<table>__postings``; a rebuild writes generation g+1 COLD under
+``<table>__postings_g{g+1}`` — no reader resolves it — and ONE
+``__meta`` snapshot swap publishes (n_buckets, postings_gen) together.
+A crash before the swap leaves every reader on the old generation,
+fully consistent; orphan generations are swept by the next
+maintenance call. Re-bucketing is answer-preserving by construction:
+bucket ids prune, never score.
 """
 
 from __future__ import annotations
+
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_bucket48
+from ..materialize import materialize
 from ..sinks.warehouse import ParquetWarehouse
 
 
 def postings_table(table: str, gen: int = 0) -> str:
     """Generation-addressed postings table name (module docstring)."""
     return f"{table}__postings" if not gen else f"{table}__postings_g{gen}"
+
+
+def meta_table(table: str) -> str:
+    return f"{table}__meta"
+
+
+def docs_table(table: str) -> str:
+    return f"{table}__docs"
+
+
+def deleted_table(table: str) -> str:
+    return f"{table}__deleted"
 
 
 # (root, meta_table, committed version) -> (n_buckets, postings_gen).
@@ -45,24 +81,203 @@ def postings_table(table: str, gen: int = 0) -> str:
 _META_CACHE: dict[tuple[str, str, str], tuple[int, int]] = {}
 
 
-def read_meta(wh: ParquetWarehouse, meta_table: str) -> tuple[int, int]:
-    """(n_buckets, postings_gen) from the one-row ``__meta`` table.
-    ``postings_gen`` is absent on pre-rebuild indexes — read as 0.
-    Memoized per committed version (see ``_META_CACHE``)."""
-    version = wh._latest_version(meta_table)
+def read_meta(wh: ParquetWarehouse, table: str) -> tuple[int, int]:
+    """(n_buckets, postings_gen) from the index's one-row ``__meta``
+    table. ``postings_gen`` is absent on pre-rebuild indexes — read as
+    0. Memoized per committed version (see ``_META_CACHE``)."""
+    meta = meta_table(table)
+    version = wh._latest_version(meta)
     if version is None:
         # no committed snapshot — let wh.read raise its own loud error
-        row = wh.read(meta_table).collect()[0].asDict()
+        row = wh.read(meta).collect()[0].asDict()
         return int(row["n_buckets"]), int(row.get("postings_gen") or 0)
-    key = (wh.root, meta_table, version)
+    key = (wh.root, meta, version)
     hit = _META_CACHE.get(key)
     if hit is None:
         if len(_META_CACHE) > 512:  # bounded across long test sessions
             _META_CACHE.clear()
-        row = wh.read(meta_table).collect()[0].asDict()
+        row = wh.read(meta).collect()[0].asDict()
         hit = (int(row["n_buckets"]), int(row.get("postings_gen") or 0))
         _META_CACHE[key] = hit
     return hit
+
+
+def guard_ids(df: DataFrame, id_col: str, message: str) -> DataFrame:
+    """Fail the job loudly with ``message`` if ``id_col`` is NULL on any
+    row (md5_bucket48's documented caller obligation, and neither the
+    replay anti-join nor a tombstone can ever match a NULL)."""
+    return df.filter(
+        F.when(
+            F.col(id_col).isNull(), F.raise_error(F.lit(message)).cast("boolean")
+        ).otherwise(F.lit(True))
+    )
+
+
+def delete_ids(
+    wh: ParquetWarehouse, ids, table: str, id_col: str, label: str
+) -> None:
+    """Append tombstones to ``<table>__deleted`` (one ``id_col``
+    column). ``ids`` is a 1-column DataFrame or an iterable of ids;
+    ``label`` names the index kind in the NULL-id error."""
+    if not isinstance(ids, DataFrame):
+        ids = wh.spark.createDataFrame([(int(i),) for i in ids], f"{id_col} long")
+    tombstones = guard_ids(
+        ids.select(F.col(ids.columns[0]).alias(id_col)),
+        id_col,
+        f"{label} index: NULL {id_col} tombstone",
+    )
+    if wh.exists(deleted_table(table)):
+        wh.append(tombstones, deleted_table(table))
+    else:
+        wh.overwrite(tombstones, deleted_table(table))
+
+
+def live_rows(
+    wh: ParquetWarehouse, table: str, df: DataFrame, id_col: str
+) -> DataFrame:
+    """Anti-join the tombstone set out of any frame carrying ids in
+    ``id_col``. Callers apply it to the already-pruned probe slice, not
+    the whole index."""
+    if not wh.exists(deleted_table(table)):
+        return df
+    dead = wh.read(deleted_table(table))
+    dead = dead.select(F.col(dead.columns[0]).alias("__dead_id")).distinct()
+    return df.join(dead, df[id_col] == dead["__dead_id"], "left_anti")
+
+
+def fold_deletes(
+    wh: ParquetWarehouse,
+    table: str,
+    id_col: str,
+    targets: tuple[tuple[str, str | None], ...],
+) -> None:
+    """Compaction: rewrite each ``(name, partition column or None)``
+    target without its tombstoned rows — re-partitioned by its hive
+    column, so probe-time static pruning survives — then clear the
+    tombstones. Afterwards a previously deleted id may be re-ingested.
+    A no-op without tombstones."""
+    if not wh.exists(deleted_table(table)):
+        return
+    for name, part in targets:
+        rows = live_rows(wh, table, wh.read(name), id_col)
+        if part is None:
+            wh.overwrite(materialize(rows), name)
+        else:
+            wh.overwrite(
+                materialize(rows.repartition(part)), name, partition_by=(part,)
+            )
+    wh.drop(deleted_table(table))
+
+
+def fold_bucketed_deletes(wh: ParquetWarehouse, table: str) -> None:
+    """:func:`fold_deletes` over a lexical index's published postings
+    generation and its membership table."""
+    gen = read_meta(wh, table)[1]
+    fold_deletes(
+        wh,
+        table,
+        "doc_id",
+        ((postings_table(table, gen), "bkt"), (docs_table(table), None)),
+    )
+
+
+def occupancy(rows: DataFrame, part_col: str, count_col: str) -> DataFrame:
+    """Per-partition row counts plus the global max/mean skew ratio —
+    the rebuild trigger metric. One partial-aggregating pass."""
+    counts = rows.groupBy(part_col).agg(F.count(F.lit(1)).alias(count_col))
+    stats = counts.agg(F.max(count_col).alias("_mx"), F.avg(count_col).alias("_mean"))
+    return counts.crossJoin(F.broadcast(stats)).select(
+        part_col, count_col, (F.col("_mx") / F.col("_mean")).alias("skew_ratio")
+    )
+
+
+def bucket_occupancy(
+    wh: ParquetWarehouse, table: str, live: bool = False
+) -> DataFrame:
+    """:func:`occupancy` of a lexical index's published postings by
+    ``bkt``. ``live=True`` anti-joins tombstones first (the probe-cost
+    view); the physical default is the storage/compaction view."""
+    postings = wh.read(postings_table(table, read_meta(wh, table)[1]))
+    if live:
+        postings = live_rows(wh, table, postings, "doc_id")
+    return occupancy(postings, "bkt", "n_postings")
+
+
+def _null_id_message(label: str, id_col: str) -> str:
+    return (
+        f"{label} index: NULL {id_col} — ids must be non-NULL for "
+        "replay-idempotent ingest"
+    )
+
+
+def build_bucketed_index(
+    wh: ParquetWarehouse,
+    table: str,
+    docs: DataFrame,
+    n_buckets: int,
+    id_col: str,
+    label: str,
+    postings_of,
+    members_of,
+) -> None:
+    """Write a lexical index from scratch: ``postings_of(docs,
+    n_buckets)`` (bkt-partitioned) and ``members_of(docs)`` (the
+    ``doc_id``-keyed membership rows) are independent jobs over the same
+    input and overlap (guide §2.6); ``__meta`` commits LAST as the
+    publish barrier, so a crash before it leaves an unpublished
+    directory a rebuild overwrites. (The postings-before-membership
+    order matters for INGEST, where prior-commit membership gates the
+    replay anti-join; a fresh build has no reader until meta.)"""
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+    members = members_of(guard_ids(docs, id_col, _null_id_message(label, id_col)))
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_post = pool.submit(
+            wh.overwrite,
+            postings_of(docs, n_buckets),
+            postings_table(table),
+            partition_by=("bkt",),
+        )
+        f_docs = pool.submit(wh.overwrite, members, docs_table(table))
+        f_post.result()
+        f_docs.result()
+    wh.overwrite(
+        wh.spark.createDataFrame([(n_buckets, 0)], "n_buckets int, postings_gen int"),
+        meta_table(table),
+    )
+
+
+def ingest_bucketed(
+    wh: ParquetWarehouse,
+    table: str,
+    batch: DataFrame,
+    id_col: str,
+    label: str,
+    postings_of,
+    members_of,
+) -> int:
+    """Fold a batch into a lexical index at O(batch) cost: ids already
+    in ``__docs`` anti-join away first (an at-least-once redelivery of
+    a COMMITTED batch appends nothing — the incremental_dedup
+    discipline; tombstoned ids are still members, so they stay dead to
+    re-ingest until the fold), then the survivors' postings append,
+    then their membership rows (module docstring's crash contract).
+    Returns the number of newly indexed documents; documents are
+    immutable under their id."""
+    n_buckets, gen = read_meta(wh, table)
+    known = wh.read(docs_table(table)).select("doc_id")
+    new_docs = materialize(
+        batch.join(known, batch[id_col] == known["doc_id"], "left_anti")
+    )  # consumed three times below; anti-join runs once
+    members = members_of(
+        guard_ids(new_docs, id_col, _null_id_message(label, id_col))
+    )
+    n_new = int(members.agg(F.count(F.lit(1)).alias("n")).collect()[0].n)
+    if n_new == 0:
+        return 0
+    wh.append(postings_of(new_docs, n_buckets), postings_table(table, gen))
+    wh.append(members, docs_table(table))
+    return n_new
 
 
 def sweep_generations(
@@ -98,9 +313,6 @@ def log_maintenance(wh: ParquetWarehouse, table: str, decision: dict) -> None:
 def maintain_bucketed_index(
     wh: ParquetWarehouse,
     table: str,
-    meta_table: str,
-    apply_deletes_fn,
-    occupancy_fn,
     hash_col: str,
     carry_cols: tuple[str, ...],
     max_skew: float,
@@ -109,8 +321,11 @@ def maintain_bucketed_index(
     """The lexical index maintenance policy (maintain_ann_index's
     three-step contract, re-bucket instead of retrain):
 
-    1. fold tombstones (``apply_deletes_fn`` — always, no-op clean);
-    2. read the LIVE bucket skew (``occupancy_fn``);
+    1. fold tombstones (:func:`fold_bucketed_deletes` — always; no-op
+       clean, and a heavily tombstoned index both wastes probe work and
+       skews the occupancy signal);
+    2. read the bucket skew (:func:`bucket_occupancy`, live after the
+       fold);
     3. past ``max_skew``, re-hash ``hash_col`` into ``rebucket_factor``
        × more buckets (splits colliding-term hotspots; a single hot
        term's posting list is irreducible by any bucketing) and
@@ -123,9 +338,9 @@ def maintain_bucketed_index(
         raise ValueError(
             f"rebucket_factor must be >= 2, got {rebucket_factor}"
         )
-    apply_deletes_fn(wh, table)
-    n_buckets, gen = read_meta(wh, meta_table)
-    occ = occupancy_fn(wh, table=table).select("skew_ratio").limit(1).collect()
+    fold_bucketed_deletes(wh, table)
+    n_buckets, gen = read_meta(wh, table)
+    occ = bucket_occupancy(wh, table).select("skew_ratio").limit(1).collect()
     skew = float(occ[0]["skew_ratio"]) if occ else 0.0
     rebuilt = False
     if skew > max_skew:
@@ -139,14 +354,13 @@ def maintain_bucketed_index(
         wh.overwrite(
             rebucketed, postings_table(table, new_gen), partition_by=("bkt",)
         )
-        spark = old.sparkSession
         # the atomic publish: one snapshot swap flips n_buckets and the
         # postings generation together
         wh.overwrite(
-            spark.createDataFrame(
+            wh.spark.createDataFrame(
                 [(new_n, new_gen)], "n_buckets int, postings_gen int"
             ),
-            meta_table,
+            meta_table(table),
         )
         n_buckets, gen, rebuilt = new_n, new_gen, True
     sweep_generations(wh, table, gen)

@@ -62,7 +62,7 @@ from ..operators.similarity import (
     pq_topk,
 )
 from ..sources.readers import load_table
-from .registry import register, scratch_warehouse
+from .registry import _memo_put, register, scratch_warehouse
 
 # ---------------------------------------------------------------------------
 # Deduplication
@@ -883,22 +883,6 @@ _BPE_MERGES = 6
 _BPE_RULES_MEMO: dict = {}
 _MG_LAWS_MEMO: dict = {}
 _LM_STATE_MEMO: dict = {}
-
-# Build-once memos are keyed on (sf_dir, mtime), so a long-lived
-# session that appends to a source table strands one entry per
-# superseded version. Bound every memo-put (round-11): 8 generations
-# is far beyond what any bench or driver run cycles through, and
-# evicting a warehouse handle only drops the in-process pointer — the
-# scratch reaper owns the on-disk lifetime, and a later miss simply
-# rebuilds.
-_MEMO_CAP = 8
-
-
-def _memo_put(memo: dict, key, value) -> None:
-    memo[key] = value
-    while len(memo) > _MEMO_CAP:
-        memo.pop(next(iter(memo)))
-
 
 def _lm_state_warehouse(spark, sf_dir: str, docs):
     """Ingest the two doc_id-median-split batches into the persisted LM
@@ -3473,7 +3457,7 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       half against the STORED centroids (map-only assign, merge pruned
       to the touched cid partitions), TOMBSTONE-delete the
       ids-ending-in-3 slice (round 9: O(ids) delete, never a physical
-      rewrite — the BM25 delete_docs contract ported to vectors), then
+      rewrite — the tombstone contract all three indexes share), then
       probe the index with a bounded literal cid set (static partition
       pruning) with the tombstones anti-joined out of the pruned probe
       slice. The oracle replays the equivalent one-shot stride-100 IVF

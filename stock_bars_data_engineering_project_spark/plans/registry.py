@@ -18,6 +18,22 @@ from pyspark.sql import DataFrame, SparkSession
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
+# The build-once memos of plans/tpch.py and plans/extensions.py are
+# keyed on (sf_dir, mtime), so a long-lived session that appends to a
+# source table strands one entry per superseded version. Bound every
+# memo-put: 8 generations is far beyond what any bench or driver run
+# cycles through, and evicting a warehouse handle only drops the
+# in-process pointer — the scratch reaper owns the on-disk lifetime,
+# and a later miss simply rebuilds.
+_MEMO_CAP = 8
+
+
+def _memo_put(memo: dict, key, value) -> None:
+    memo[key] = value
+    while len(memo) > _MEMO_CAP:
+        memo.pop(next(iter(memo)))
+
+
 def scratch_warehouse(spark: SparkSession, label: str):
     """Fresh temp ParquetWarehouse for a driver row that materializes
     working tables. The returned DataFrame lazily reads the working

@@ -26,12 +26,26 @@ from pyspark.sql import functions as F
 
 from ..functions.scalars import round_half_up, sql_round
 from ..sources.readers import load_table
-from .registry import register
+from .registry import _memo_put, register
 
 def _revenue():
     # Built lazily: F.col needs an active SparkContext in classic mode,
     # and this module imports before any session exists.
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
+
+
+# A rounded revenue total sums each row cast to DECIMAL(30,10), so the
+# sum is exact and its half-up rounding cannot depend on summation
+# order: a double SUM of a group whose exact revenue ends in 5 at the
+# third decimal lands on either side of it (1042817.255 summed to
+# 1042817.2549999998 in one engine and rounded up in the other).
+def _revenue_sum():
+    return F.sum(_revenue().cast("decimal(30,10)"))
+
+
+_REVENUE_SUM_SQL = (
+    "SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(30,10)))"
+)
 
 
 # q3_shipping_priority was consolidated out of the registry (round-2):
@@ -43,7 +57,7 @@ def _revenue():
     "q5_region_volume",
     oracle=f"""
 SELECT n.n_name,
-       {sql_round("SUM(l.l_extendedprice * (1 - l.l_discount))", 2)} AS revenue
+       {sql_round(_REVENUE_SUM_SQL, 2)} AS revenue
 FROM customer c
 JOIN orders o ON c.c_custkey = o.o_custkey
 JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -86,7 +100,7 @@ def q5_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
         .groupBy("n_name")
-        .agg(round_half_up(F.sum(_revenue()), 2).alias("revenue"))
+        .agg(round_half_up(_revenue_sum(), 2).alias("revenue"))
     )
 
 
@@ -154,7 +168,7 @@ def _set_ops_bloom_words(sf_dir: str, recent: DataFrame, urgent: DataFrame):
             bloom_bitmap(recent, "o_custkey"),
             bloom_bitmap(urgent, "o_custkey"),
         )
-        _SET_OPS_BLOOM_MEMO[key] = pair
+        _memo_put(_SET_OPS_BLOOM_MEMO, key, pair)
     return pair
 
 
@@ -353,7 +367,7 @@ def cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q10_returned_items",
     oracle=f"""
 SELECT c.c_custkey, c.c_name,
-       {sql_round("SUM(l.l_extendedprice * (1 - l.l_discount))", 2)} AS revenue,
+       {sql_round(_REVENUE_SUM_SQL, 2)} AS revenue,
        n.n_name
 FROM customer c
 JOIN orders o ON c.c_custkey = o.o_custkey
@@ -385,7 +399,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
-        .agg(round_half_up(F.sum(_revenue()), 2).alias("revenue"))
+        .agg(round_half_up(_revenue_sum(), 2).alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "n_name")
         .orderBy(F.col("revenue").desc(), "c_custkey")
         .limit(20)
@@ -406,7 +420,7 @@ SELECT 'promo_pct' AS metric, (
 ) AS value
 UNION ALL
 SELECT 'bracket_revenue' AS metric, (
-    SELECT {sql_round("SUM(l.l_extendedprice * (1 - l.l_discount))", 2)}
+    SELECT {sql_round(_REVENUE_SUM_SQL, 2)}
     FROM lineitem l
     JOIN part p ON l.l_partkey = p.p_partkey
     WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15
@@ -452,7 +466,7 @@ def promo_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bracket_row = (
         j.filter(bracket)
-        .agg(round_half_up(F.sum(_revenue()), 2).alias("value"))
+        .agg(round_half_up(_revenue_sum(), 2).alias("value"))
         .select(F.lit("bracket_revenue").alias("metric"), "value")
     )
     return promo_row.unionByName(bracket_row)

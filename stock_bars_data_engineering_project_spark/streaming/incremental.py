@@ -377,10 +377,11 @@ def trgm_ingest_stream(
     return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)
 
 
-_INDEX_DELETE_FNS = {
-    "ann": ("..operators.incremental_ann", "delete_vectors", "ann_index"),
-    "bm25": ("..operators.incremental_retrieval", "delete_docs", "bm25_index"),
-    "trgm": ("..operators.incremental_trgm", "delete_docs", "trgm_index"),
+# index kind -> (tombstone id column, default index table)
+_INDEX_KINDS = {
+    "ann": ("vec_id", "ann_index"),
+    "bm25": ("doc_id", "bm25_index"),
+    "trgm": ("doc_id", "trgm_index"),
 }
 
 
@@ -397,11 +398,11 @@ def index_delete_stream(
     """Streaming TOMBSTONE drain — the retraction half of the index
     lifecycle (round 10): id files land (a dedup pipeline's retraction
     feed, a GDPR erasure queue) and each micro-batch appends them to
-    the index's ``__deleted`` table through the module's own
-    ``delete_docs``/``delete_vectors``, so queries exclude them from
-    the next probe onward at O(ids) cost. ``kind`` picks the index
-    family (``'ann' | 'bm25' | 'trgm'``); ``schema`` is the id-file
-    schema (first column = the id).
+    the index's ``__deleted`` table through ``index_maint.delete_ids``
+    (the append behind ``delete_docs``/``delete_vectors``), so queries
+    exclude them from the next probe onward at O(ids) cost. ``kind``
+    picks the index family (``'ann' | 'bm25' | 'trgm'``); ``schema`` is
+    the id-file schema (first column = the id).
 
     Exactly-once is WEAKER here than the ingest drains' and that is
     fine by design: tombstone appends are idempotent in EFFECT
@@ -409,22 +410,20 @@ def index_delete_stream(
     the next apply_deletes/maintenance fold), so an at-least-once
     replay costs duplicate rows in the O(ids) tombstone table, never a
     wrong answer. Empty micro-batches are skipped."""
-    if kind not in _INDEX_DELETE_FNS:
+    if kind not in _INDEX_KINDS:
         raise ValueError(
             f"unknown index kind {kind!r}; expected one of "
-            f"{sorted(_INDEX_DELETE_FNS)}"
+            f"{sorted(_INDEX_KINDS)}"
         )
-    mod_name, fn_name, default_table = _INDEX_DELETE_FNS[kind]
-    import importlib
+    from ..operators.index_maint import delete_ids
 
-    mod = importlib.import_module(mod_name, package=__package__)
-    delete_fn = getattr(mod, fn_name)
+    id_col, default_table = _INDEX_KINDS[kind]
     target = table or default_table
 
     def _apply(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
-        delete_fn(wh, batch, table=target)
+        delete_ids(wh, batch, target, id_col, kind)
 
     return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)
 

@@ -19,6 +19,29 @@ from stock_bars_data_engineering_project_spark.session import get_spark  # noqa:
 _SLOW_MANIFEST = Path(__file__).with_name("slow_tests.txt")
 
 
+_TESTS_DIR = Path(__file__).resolve().parent
+# files whose collection errored (--continue-on-collection-errors): their
+# manifest lines cannot match and are not stale
+_UNCOLLECTED: set[str] = set()
+
+
+def pytest_collectreport(report):
+    if report.failed:
+        _UNCOLLECTED.add(report.nodeid.split("::")[0])
+
+
+def _collects_whole_suite(config) -> bool:
+    """True when a positional argument is tests/ itself or a directory
+    containing it (deselection by -m/-k happens after this check)."""
+    if getattr(config.option, "lf", False):
+        return False
+    for arg in config.args:
+        path = Path(config.invocation_params.dir, arg.split("::")[0]).resolve()
+        if path == _TESTS_DIR or path in _TESTS_DIR.parents:
+            return True
+    return False
+
+
 def pytest_collection_modifyitems(config, items):
     slow_ids = {
         line.strip()
@@ -28,6 +51,17 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if item.nodeid in slow_ids:
             item.add_marker(pytest.mark.slow)
+    if _collects_whole_suite(config):
+        stale = sorted(
+            slow_ids
+            - {item.nodeid for item in items}
+            - {i for i in slow_ids if i.split("::")[0] in _UNCOLLECTED}
+        )
+        if stale:
+            raise pytest.UsageError(
+                f"{_SLOW_MANIFEST.name} names tests that were not collected "
+                "(renamed or removed? update the manifest): " + ", ".join(stale)
+            )
 
 
 @pytest.fixture(scope="session")

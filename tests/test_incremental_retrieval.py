@@ -105,7 +105,9 @@ def test_crash_window_duplicate_postings_heal(spark, tmp_path):
     the query path's full-row dedup must heal to the one-shot answer."""
     from stock_bars_data_engineering_project_spark.operators.incremental_retrieval import (
         _batch_postings,
-        _postings_table,
+    )
+    from stock_bars_data_engineering_project_spark.operators.index_maint import (
+        postings_table,
     )
 
     corpus, queries = _corpus_and_queries(spark)
@@ -114,7 +116,7 @@ def test_crash_window_duplicate_postings_heal(spark, tmp_path):
     odd = corpus.filter(F.col("doc_id") % 2 == 1)
     build_bm25_index(wh, even, table="bm")
     # crash simulation: postings landed, membership did not
-    wh.append(_batch_postings(odd, 64, "doc_id", "text"), _postings_table("bm"))
+    wh.append(_batch_postings(odd, 64, "doc_id", "text"), postings_table("bm"))
     # redelivery: anti-join sees no membership, ingests the whole batch
     assert ingest_docs(wh, odd, table="bm") == odd.count()
 

@@ -469,7 +469,7 @@ def test_version_read_cache_is_bounded_lru(spark, tmp_path, monkeypatch):
 
 
 def test_build_memo_put_is_bounded():
-    from stock_bars_data_engineering_project_spark.plans import extensions as X
+    from stock_bars_data_engineering_project_spark.plans import registry as X
 
     memo: dict = {}
     for i in range(X._MEMO_CAP + 3):
