@@ -11,6 +11,13 @@ z-dimensions. This is the same layout lever Delta/Iceberg expose as
 ``ZORDER BY`` / sort-order transforms, built here from plain Column
 expressions (shift/mask arithmetic — whole-stage codegen, no UDF).
 
+The warehouse applies either key under one clustering policy
+(``sinks/warehouse._cluster_layout``, shared by ``overwrite`` and
+``compact``): an unpartitioned table is range-split on the key into
+disjoint, sorted files; a hive-partitioned table is hashed on its
+partition columns and sorted on the key within each partition, so every
+partition dir holds one sorted file set.
+
 Normalization maps each column to an integer grid via min/max scaling
 (one cheap agg at write time). Value skew degrades grid-cell occupancy,
 not correctness — stats-based skipping only needs monotonicity of the

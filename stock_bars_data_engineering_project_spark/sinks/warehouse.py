@@ -30,25 +30,40 @@ materializes a full snapshot once the chain reaches
 ``manifest_limit`` members (bounding read fan-in between compactions).
 
 Scale posture: snapshots can be hive-partitioned (``partition_by``), and
-``merge`` prunes the rewrite to ONLY the partitions present in the
-source batch — at 100 TB with date-partitioned facts an incremental
-upsert rewrites a handful of date partitions, not the table. The
-unpartitioned fallback is a full anti-join rewrite, which is what
-MERGE degenerates to on any engine when the target isn't partitioned.
+``merge`` and ``delete_where`` prune the rewrite to ONLY the partitions
+they touch — at 100 TB with date-partitioned facts an incremental
+upsert rewrites a handful of date partitions, not the table. Both run
+the same pruned rewrite: read the touched partitions, write their new
+rows, hardlink every other partition's files into the new snapshot.
+The unpartitioned fallback is a full rewrite, which is what MERGE
+degenerates to on any engine when the target isn't partitioned.
+
+Every version dir is written by one snapshot writer, so the rules a
+snapshot must satisfy (immutable dir, recorded hive layout, readable
+even when a partitioned write emits no file) hold for every verb.
+
+Clustering (``overwrite(cluster_by=/zorder_by=)``, re-applied by
+``compact``) follows one policy: a partitioned table is hashed on its
+partition columns and sorted within each partition — one sorted file
+set per partition dir; an unpartitioned table is range-split on the
+cluster key into disjoint, sorted files.
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
 import os
 import shutil
 import tempfile
 import threading
 import time
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _POINTER = "_LATEST"
 _MANIFEST = "_MANIFEST"
@@ -171,6 +186,54 @@ def _partition_values_pred(parts: list[tuple], partition_by) -> "Column":
             conj = term if conj is None else (conj & term)
         pred = conj if pred is None else (pred | conj)
     return pred
+
+
+def _union_by_name(frames) -> DataFrame:
+    """One frame from manifest members' frames: unionByName with
+    ``allowMissingColumns``, so drift-appended members align the way
+    ``append(allow_schema_drift=True)`` aligned them at write time."""
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+    )
+
+
+def _colocated(df: DataFrame, partition_by: tuple[str, ...]) -> DataFrame:
+    """Co-locate each hive partition's rows before a partitioned write.
+    Without this each of the N shuffle partitions writes a sliver into
+    every touched partition dir — N×P files where P suffice, and at
+    x128 the refresh soak measured the resulting file LISTING dominating
+    every subsequent skinny read of the table."""
+    if partition_by:
+        return df.repartition(*[F.col(c) for c in partition_by])
+    return df
+
+
+def _cluster_layout(
+    df: DataFrame,
+    partition_by: tuple[str, ...],
+    spec: tuple[str, tuple[str, ...], str],
+    n_files: int | None,
+) -> DataFrame:
+    """The physical sort a cluster intent ``spec`` = (kind, cols,
+    scaler) asks for. Partitioned: hash on the partition columns and
+    sort within each partition, so every partition dir holds one sorted
+    file set. Unpartitioned: range-split into ``n_files`` disjoint key
+    ranges (AQE picks the count when None), each sorted. ``zorder``
+    sorts on the Morton key of ``cols`` (functions/zorder.py)."""
+    kind, cols, scaler = spec
+    if kind == "zorder":
+        from ..functions.zorder import with_zorder_key
+
+        df = with_zorder_key(df, cols, scaler=scaler)
+        cols = ("_zorder",)
+    if partition_by:
+        df = _colocated(df, partition_by)
+    else:
+        df = df.repartitionByRange(
+            *([n_files] if n_files else []), *[F.col(c) for c in cols]
+        )
+    df = df.sortWithinPartitions(*cols)
+    return df.drop("_zorder") if kind == "zorder" else df
 
 
 def _file_bloom(
@@ -360,8 +423,28 @@ class ParquetWarehouse:
         os.replace(tmp, os.path.join(tdir, _POINTER))
 
     def _write_snapshot(
-        self, df: DataFrame, table: str, partition_by: tuple[str, ...] = ()
+        self,
+        df: DataFrame,
+        table: str,
+        partition_by: tuple[str, ...] = (),
+        chain: list[str] | None = None,
+        carry: tuple[str, set[str]] | None = None,
     ) -> str:
+        """Write ``df`` as a new, uncommitted version dir of ``table`` —
+        the one writer every snapshot goes through; returns the version.
+
+        ``chain`` makes the version a manifest snapshot extending those
+        member dirs (append). ``carry=(prev, exclude)`` hardlinks every
+        partition of ``prev`` that the write did not produce, and whose
+        leaf dir is not in ``exclude``, into the new dir (the pruned
+        rewrite).
+
+        A partitioned write of zero rows emits no parquet file, and a
+        snapshot without one fails every later read and append with
+        UNABLE_TO_INFER_SCHEMA. So a file-less manifest version lists
+        only ``chain`` (old ∪ ∅ = old), and any other file-less
+        partitioned snapshot gets one zero-row file with the frame's
+        columns."""
         version = self._next_version(table)
         path = os.path.join(self.table_path(table), version)
         if os.path.exists(path):
@@ -376,6 +459,17 @@ class ParquetWarehouse:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
+        if carry is not None:
+            self._link_untouched_partitions(
+                table, carry[0], version, partition_by, carry[1]
+            )
+        empty = bool(partition_by) and not self._has_data_files(table, version)
+        if chain is not None:
+            with open(os.path.join(path, _MANIFEST), "w") as f:
+                f.write("\n".join(chain if empty else [*chain, version]) + "\n")
+        elif empty:
+            # unpartitioned, Spark writes a schema-only file for zero rows
+            df.limit(0).write.mode("append").parquet(path)
         if partition_by:
             # record the hive layout so append can INHERIT it (a caller
             # appending without partition_by must not silently flatten a
@@ -394,6 +488,29 @@ class ParquetWarehouse:
             if any(f.endswith(".parquet") for f in filenames):
                 return True
         return False
+
+    def _snapshot(self, table: str, version: str | None = None) -> str:
+        """The snapshot a call targets: ``version`` when pinned, else
+        the live one."""
+        v = version or self._latest_version(table)
+        if v is None:
+            raise FileNotFoundError(f"no such table: {table}")
+        return v
+
+    def _target_layout(
+        self, table: str, partition_by: tuple[str, ...] | None
+    ) -> tuple[str, ...]:
+        """Hive layout a write keeps. ``None`` inherits the live
+        snapshot's recorded layout (``()`` for a new table): a write
+        that does not name a layout must not silently flatten a
+        partitioned table — least of all the chain-collapsing writes
+        (compact, the materializing append), where the change would be
+        invisible. An explicit tuple, ``()`` included, is taken as
+        given."""
+        if partition_by is not None:
+            return tuple(partition_by)
+        cur = self._latest_version(table)
+        return self._layout(table, cur) if cur else ()
 
     def _layout(self, table: str, version: str) -> tuple[str, ...]:
         """Partition columns the snapshot was written with (() if
@@ -417,30 +534,39 @@ class ParquetWarehouse:
         except FileNotFoundError:
             return [version]
 
+    def _member_frames(
+        self, table: str, version: str, files: list[str] | None = None
+    ) -> list[tuple[str, DataFrame]]:
+        """(member dir, frame) per manifest member of a snapshot: the
+        whole member dir, or — given ``files`` — only the listed files
+        under it, read with the member as ``basePath`` so hive partition
+        columns survive a file-list read. Members holding none of
+        ``files`` are left out."""
+        out = []
+        for m in self._manifest_members(table, version):
+            base = os.path.abspath(os.path.join(self.table_path(table), m))
+            if files is None:
+                out.append((base, _read_version_dir(self.spark, base)))
+                continue
+            mine = sorted(
+                f
+                for f in map(os.path.abspath, files)
+                if f.startswith(base + os.sep)
+            )
+            if mine:
+                out.append(
+                    (base, self.spark.read.option("basePath", base).parquet(*mine))
+                )
+        return out
+
     # -- reads --------------------------------------------------------------
 
     def read(self, table: str, version: str | None = None) -> DataFrame:
-        """S5: full-table scan of the latest (or a pinned) snapshot.
-
-        A manifest snapshot reads as the unionByName of its member
-        directories (each member read whole, so hive-partition columns
-        survive); ``allowMissingColumns`` aligns drift-appended members
-        the same way ``append(allow_schema_drift=True)`` aligned them at
-        write time."""
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
-        members = self._manifest_members(table, v)
-        parts = [
-            _read_version_dir(
-                self.spark, os.path.join(self.table_path(table), m)
-            )
-            for m in members
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+        """S5: full-table scan of the latest (or a pinned) snapshot — a
+        manifest snapshot reads as the union of its member directories
+        (each member read whole, so hive-partition columns survive)."""
+        v = self._snapshot(table, version)
+        return _union_by_name(df for _, df in self._member_frames(table, v))
 
     def sql(self, query: str, **views: str) -> DataFrame:
         """S6: ad-hoc SQL over warehouse tables (extract_from_query,
@@ -480,16 +606,14 @@ class ParquetWarehouse:
         drifted append forever.
         """
         with self._write_lock(table):
-            if not self.exists(table):
+            # an append never intends a layout change, so an omitted
+            # layout — () here — inherits the live one
+            partition_by = self._target_layout(table, partition_by or None)
+            prev = self._latest_version(table)
+            if prev is None:
                 version = self._write_snapshot(df, table, partition_by)
                 self._commit(table, version)
                 return
-            prev = self._latest_version(table)
-            # an append never intends a layout change: inherit the live
-            # snapshot's recorded hive layout when the caller omits it,
-            # so batch members AND the limit-triggered materialization
-            # keep the table partitioned
-            partition_by = partition_by or self._layout(table, prev)
             existing = None
             if not allow_schema_drift:
                 existing = self.read(table)
@@ -534,21 +658,8 @@ class ParquetWarehouse:
                     df, allowMissingColumns=allow_schema_drift
                 )
                 version = self._write_snapshot(merged, table, partition_by)
-                self._commit(table, version)
-                return
-            version = self._write_snapshot(df, table, partition_by)
-            members = [*chain, version]
-            if not self._has_data_files(table, version):
-                # empty batch: old ∪ ∅ = old. A PARTITIONED write of an
-                # empty frame emits no data files at all, and a member
-                # dir without parquet files poisons every later read
-                # (UNABLE_TO_INFER_SCHEMA on the union) — so commit the
-                # version with the prior members only and never list
-                # the file-less dir.
-                members = chain
-            mf = os.path.join(self.table_path(table), version, _MANIFEST)
-            with open(mf, "w") as f:
-                f.write("\n".join(members) + "\n")
+            else:
+                version = self._write_snapshot(df, table, partition_by, chain)
             self._commit(table, version)
 
     def overwrite(
@@ -574,7 +685,11 @@ class ParquetWarehouse:
         skips whole files/row-groups via parquet min/max stats — the
         single biggest read-amplification lever for time-filtered scans
         at 100 TB. Lexicographic, so only the LEADING column's file
-        stats stay tight.
+        stats stay tight. On a hive-partitioned table the snapshot is
+        instead hashed on the partition columns and sorted within each
+        partition — one sorted file set per partition dir, the shape
+        ``compact`` re-applies; ``n_files`` sizes only the unpartitioned
+        range split.
 
         ``zorder_by`` (mutually exclusive) clusters on the Morton
         interleaving of 2-3 columns instead: each file covers a small
@@ -587,52 +702,36 @@ class ParquetWarehouse:
         """
         if cluster_by and zorder_by:
             raise ValueError("cluster_by and zorder_by are mutually exclusive")
+        spec = None
         if zorder_by:
-            from ..functions.zorder import with_zorder_key
-
-            df = with_zorder_key(df, zorder_by, scaler=zorder_scaler)
-            args = ([n_files] if n_files else []) + [F.col("_zorder")]
-            df = (
-                df.repartitionByRange(*args)
-                .sortWithinPartitions("_zorder")
-                .drop("_zorder")
-            )
-        if cluster_by:
-            # explicit n_files pins the range-split width (AQE otherwise
-            # coalesces small data to one file, defeating the layout)
-            args = ([n_files] if n_files else []) + [F.col(c) for c in cluster_by]
-            df = df.repartitionByRange(*args).sortWithinPartitions(*cluster_by)
+            spec = ("zorder", tuple(zorder_by), zorder_scaler)
+        elif cluster_by:
+            spec = ("cluster", tuple(cluster_by), "minmax")
         with self._write_lock(table):
-            if partition_by is None:
-                cur = self._latest_version(table)
-                partition_by = self._layout(table, cur) if cur else ()
+            partition_by = self._target_layout(table, partition_by)
+            if spec:
+                # explicit n_files pins the range-split width (AQE otherwise
+                # coalesces small data to one file, defeating the layout)
+                df = _cluster_layout(df, partition_by, spec, n_files)
             version = self._write_snapshot(df, table, partition_by)
-            if cluster_by or zorder_by:
+            if spec:
                 # record the layout INTENT beside the snapshot, so
                 # compact can re-apply it instead of silently degrading
                 # every stats-skipping property the layout bought
-                self._record_cluster(
-                    table, version, cluster_by, zorder_by, zorder_scaler
-                )
+                self._record_cluster(table, version, spec)
             self._commit(table, version)
 
     def _record_cluster(
-        self,
-        table: str,
-        version: str,
-        cluster_by: tuple[str, ...],
-        zorder_by: tuple[str, ...],
-        zorder_scaler: str = "minmax",
+        self, table: str, version: str, spec: tuple[str, tuple[str, ...], str]
     ) -> None:
-        spec = (
-            f"zorder:{','.join(zorder_by)}:{zorder_scaler}"
-            if zorder_by
-            else f"cluster:{','.join(cluster_by)}"
-        )
+        kind, cols, scaler = spec
+        text = f"{kind}:{','.join(cols)}"
+        if kind == "zorder":
+            text += f":{scaler}"
         with open(
             os.path.join(self.table_path(table), version, _CLUSTER), "w"
         ) as f:
-            f.write(spec)
+            f.write(text)
 
     def _cluster_spec(
         self, table: str
@@ -691,39 +790,27 @@ class ParquetWarehouse:
         """
         from ..operators.merge import upsert_frames
 
-        def _colocated(df: DataFrame) -> DataFrame:
-            # co-locate each hive partition before the write (the
-            # build_ann_index small-files discipline, enforced HERE so
-            # every merge inherits it): without this each of the
-            # upsert's N shuffle partitions writes a sliver into every
-            # touched partition dir — N×P files where P suffice, and at
-            # x128 the refresh soak measured the resulting file LISTING
-            # dominating every subsequent skinny read of the table
-            if partition_by:
-                return df.repartition(*[F.col(c) for c in partition_by])
-            return df
-
         src = source.dropDuplicates(list(keys))
-        with self._write_lock(table):
-            if not self.exists(table):
-                version = self._write_snapshot(
-                    _colocated(src), table, partition_by or ()
-                )
-                self._commit(table, version)
-                return
-            prev = self._latest_version(table)
-            if partition_by is None:
-                # a merge never intends a layout change (same contract as
-                # append): inherit the live snapshot's recorded hive
-                # layout so an upsert cannot silently flatten the table
-                partition_by = self._layout(table, prev)
 
-            target = self.read(table)
-            if (
+        def _upsert(target: DataFrame) -> DataFrame:
+            return upsert_frames(
+                target, src, keys, allow_schema_drift, source_unique=True
+            )
+
+        with self._write_lock(table):
+            # a merge never intends a layout change (same contract as
+            # append), so an omitted layout inherits the live one
+            partition_by = self._target_layout(table, partition_by)
+            prev = self._latest_version(table)
+            if prev is None:
+                version = self._write_snapshot(
+                    _colocated(src, partition_by), table, partition_by
+                )
+            elif (
                 partition_by
                 and set(partition_by) <= set(src.columns)
                 and set(partition_by) <= set(keys)
-                and tuple(partition_by) == self._layout(table, prev)
+                and partition_by == self._layout(table, prev)
                 and not allow_schema_drift
                 and self._members_schema_consistent(table, prev)
             ):
@@ -738,49 +825,16 @@ class ParquetWarehouse:
                 # dir, and a single-dir read does not name-align drifted
                 # schemas the way the manifest union does. Anything else
                 # falls through to the full-table merge.
-                # the touched values are batch-derived and bounded, so
-                # they collect to a driver literal and the target read
-                # STATICALLY partition-prunes — without this the semi
-                # join scans every partition (all columns) just to
-                # discover which rows it keeps, an O(table) read that
-                # defeats the O(touched) write
-                parts = [
-                    tuple(r) for r in
-                    src.select(*partition_by).distinct().collect()
-                ]
-                if not parts:
-                    touched = target.filter(F.lit(False))
-                elif len(parts) > 1000:
-                    # a batch touching >1000 partitions would blow the
-                    # literal predicate up; the broadcast semi join is
-                    # the right shape there (and such a batch rewrites
-                    # most of the table anyway)
-                    touched = target.join(
-                        F.broadcast(
-                            src.select(*partition_by).distinct()
-                        ),
-                        on=list(partition_by),
-                        how="left_semi",
-                    )
-                else:
-                    touched = target.filter(
-                        _partition_values_pred(parts, partition_by)
-                    )
-                merged_touched = upsert_frames(
-                    touched, src, keys, allow_schema_drift, source_unique=True
-                )
-                version = self._write_snapshot(
-                    _colocated(merged_touched), table, partition_by
-                )
-                self._link_untouched_partitions(
-                    table, prev, version, partition_by
+                keyed = src.select(*partition_by)
+                parts = [tuple(r) for r in keyed.distinct().collect()]
+                version = self._rewrite_partitions(
+                    table, prev, partition_by, parts, keyed.schema, _upsert
                 )
             else:
-                merged = upsert_frames(
-                    target, src, keys, allow_schema_drift, source_unique=True
-                )
                 version = self._write_snapshot(
-                    _colocated(merged), table, partition_by
+                    _colocated(_upsert(self.read(table, prev)), partition_by),
+                    table,
+                    partition_by,
                 )
             self._commit(table, version)
 
@@ -797,8 +851,8 @@ class ParquetWarehouse:
         (SQL DELETE semantics — a NULL condition deletes nothing).
 
         On a hive-partitioned, schema-consistent table the rewrite is
-        PHYSICAL-partition-pruned, the merge discipline reused verbatim:
-        one pushdown-filtered scan finds the touched partition values
+        PHYSICAL-partition-pruned, on the same path as merge's: one
+        pushdown-filtered scan finds the touched partition values
         (bounded driver metadata), only those partitions' SURVIVORS are
         rewritten, and every untouched partition's immutable files
         hardlink-carry into the new snapshot — I/O is O(touched),
@@ -815,12 +869,9 @@ class ParquetWarehouse:
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         hit = F.coalesce(pred.cast("boolean"), F.lit(False))
         with self._write_lock(table):
-            prev = self._latest_version(table)
-            if prev is None:
-                raise FileNotFoundError(f"no such table: {table}")
-            if partition_by is None:
-                partition_by = self._layout(table, prev)
-            target = self.read(table)
+            prev = self._snapshot(table)
+            partition_by = self._target_layout(table, partition_by)
+            target = self.read(table, prev)
             if partition_by and self._members_schema_consistent(table, prev):
                 # ONE pushdown-filtered scan per member finds both the
                 # touched partition VALUES (for the survivor rewrite)
@@ -833,12 +884,9 @@ class ParquetWarehouse:
                 # hardlink the old files back in — a delete that
                 # empties a partition (the most common GDPR shape)
                 # silently resurrected.
-                tdir = self.table_path(table)
                 touched_vals: set[tuple] = set()
                 touched_rel: set[str] = set()
-                for m in self._manifest_members(table, prev):
-                    mdir = os.path.abspath(os.path.join(tdir, m))
-                    mdf = _read_version_dir(self.spark, mdir)
+                for mdir, mdf in self._member_frames(table, prev):
                     for r in (
                         mdf.filter(hit)
                         .select(
@@ -851,40 +899,70 @@ class ParquetWarehouse:
                         touched_vals.add(tuple(r[c] for c in partition_by))
                         leaf = os.path.dirname(_local_path(r["__fp"]))
                         touched_rel.add(os.path.relpath(leaf, mdir))
-                parts = sorted(
-                    touched_vals, key=lambda t: tuple(str(x) for x in t)
-                )
-                if not parts:
+                if not touched_vals:
                     return 0
-                if len(parts) > 1000:
-                    touched = target.join(
-                        F.broadcast(
-                            target.filter(hit).select(*partition_by).distinct()
-                        ),
-                        on=list(partition_by),
-                        how="left_semi",
-                    )
-                else:
-                    touched = target.filter(
-                        _partition_values_pred(parts, partition_by)
-                    )
-                survivors = touched.filter(~hit).repartition(
-                    *[F.col(c) for c in partition_by]
-                )
-                version = self._write_snapshot(survivors, table, partition_by)
-                self._link_untouched_partitions(
-                    table, prev, version, partition_by, exclude=touched_rel
+                version = self._rewrite_partitions(
+                    table,
+                    prev,
+                    partition_by,
+                    sorted(touched_vals, key=lambda t: tuple(map(str, t))),
+                    target.select(*partition_by).schema,
+                    lambda touched: touched.filter(~hit),
+                    exclude=touched_rel,
                 )
                 self._commit(table, version)
-                return len(parts)
+                return len(touched_vals)
             # full-rewrite fallback; commit only if something matched
             if target.filter(hit).limit(1).count() == 0:
                 return 0
             version = self._write_snapshot(
-                target.filter(~hit), table, partition_by or ()
+                target.filter(~hit), table, partition_by
             )
             self._commit(table, version)
             return 1
+
+    def _rewrite_partitions(
+        self,
+        table: str,
+        prev: str,
+        partition_by: tuple[str, ...],
+        parts: list[tuple],
+        parts_schema: StructType,
+        rewrite: Callable[[DataFrame], DataFrame],
+        exclude: set[str] = frozenset(),
+    ) -> str:
+        """Partition-pruned rewrite of snapshot ``prev`` — the one path
+        ``merge`` and ``delete_where`` share; returns the uncommitted
+        version. Only the rows of the touched partition-value tuples
+        ``parts`` are read, ``rewrite(touched)`` is written co-located
+        on the partition columns, and every other partition of ``prev``
+        is hardlinked into the new snapshot, bar the leaf dirs in
+        ``exclude`` (touched partitions the rewrite may leave empty).
+
+        The touched values are bounded driver data, so they become a
+        literal predicate and the read STATICALLY partition-prunes —
+        a semi join would scan every partition (all columns) just to
+        discover which rows it keeps, an O(table) read that defeats the
+        O(touched) write. Above 1000 partitions the literal would blow
+        up, so the values (``parts_schema``) are broadcast into a semi
+        join instead; such a rewrite covers most of the table anyway."""
+        target = self.read(table, prev)
+        if not parts:
+            touched = target.filter(F.lit(False))
+        elif len(parts) > 1000:
+            touched = target.join(
+                F.broadcast(self.spark.createDataFrame(parts, parts_schema)),
+                on=list(partition_by),
+                how="left_semi",
+            )
+        else:
+            touched = target.filter(_partition_values_pred(parts, partition_by))
+        return self._write_snapshot(
+            _colocated(rewrite(touched), partition_by),
+            table,
+            partition_by,
+            carry=(prev, exclude),
+        )
 
     def _members_schema_consistent(self, table: str, version: str) -> bool:
         """True when every manifest member of a snapshot carries the
@@ -895,17 +973,12 @@ class ParquetWarehouse:
         fall back to the full rewrite, which re-aligns it. One driver
         footer read per member, members bounded by manifest_limit;
         the overwhelmingly common single-member case is free."""
-        members = self._manifest_members(table, version)
-        if len(members) <= 1:
+        if len(self._manifest_members(table, version)) <= 1:
             return True
-        schemas = set()
-        for m in members:
-            df = _read_version_dir(
-                self.spark, os.path.join(self.table_path(table), m)
-            )
-            schemas.add(
-                tuple(sorted((f.name, str(f.dataType)) for f in df.schema))
-            )
+        schemas = {
+            tuple(sorted((f.name, str(f.dataType)) for f in df.schema))
+            for _, df in self._member_frames(table, version)
+        }
         return len(schemas) == 1
 
     def _partition_leaf_dirs(self, base: str, depth: int) -> dict[str, str]:
@@ -935,7 +1008,7 @@ class ParquetWarehouse:
         partition_by: tuple[str, ...],
         exclude: set[str] = frozenset(),
     ) -> None:
-        """Carry every partition NOT rewritten by this merge into the
+        """Carry every partition NOT rewritten by this write into the
         new snapshot by hardlinking its parquet files — data files are
         immutable once written (the snapshot contract), so sharing
         inodes is safe, O(files) metadata, and vacuum-proof (deleting
@@ -976,9 +1049,7 @@ class ParquetWarehouse:
     def data_files(self, table: str, version: str | None = None) -> list[str]:
         """Data files of a snapshot (manifest members included) — the
         observable compaction metric."""
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
+        v = self._snapshot(table, version)
         out: list[str] = []
         for member in self._manifest_members(table, v):
             for dirpath, dirs, names in os.walk(
@@ -1014,9 +1085,7 @@ class ParquetWarehouse:
         describes — immutable because the snapshot dir is; pass
         ``dest`` to export elsewhere. O(files) driver metadata, no data
         movement."""
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
+        v = self._snapshot(table, version)
         files = self.data_files(table, v)
         out = dest or os.path.join(self.table_path(table), v, "_FILELIST")
         fd, tmp = tempfile.mkstemp(dir=os.path.dirname(out), prefix="._fl")
@@ -1062,18 +1131,13 @@ class ParquetWarehouse:
         (explode k positions -> per-(file, word) bit_or -> word-array
         assembly), all bounded by files x bloom_bits/32.
         """
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
+        v = self._snapshot(table, version)
         if bloom_bits <= 0 or bloom_bits % 32 != 0:
             raise ValueError(f"bloom_bits must be a positive multiple of 32")
         want = list(dict.fromkeys([*cols, *bloom_cols]))
         parts = []
         seen: set[str] = set()
-        for m in self._manifest_members(table, v):
-            df = _read_version_dir(
-                self.spark, os.path.join(self.table_path(table), m)
-            )
+        for _, df in self._member_frames(table, v):
             present = [c for c in want if c in df.columns]
             seen.update(present)
             parts.append(
@@ -1087,9 +1151,7 @@ class ParquetWarehouse:
                 f"file_stats({table!r}): no snapshot member has column(s) "
                 f"{missing}"
             )
-        rows = parts[0]
-        for p in parts[1:]:
-            rows = rows.unionByName(p, allowMissingColumns=True)
+        rows = _union_by_name(parts)
         # bloom columns get min/max too ('want', not 'cols'): skip_files'
         # persisted-stats gate requires {c}__min for EVERY predicate
         # column, so a bloom-only column would silently demote every
@@ -1112,9 +1174,7 @@ class ParquetWarehouse:
         ``OPTIMIZE``/checkpoint loop. Immutable because snapshot
         members are: a version's file set never changes, so its stats
         never go stale. Returns the manifest path."""
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
+        v = self._snapshot(table, version)
         vdir = os.path.join(self.table_path(table), v)
         tmp = os.path.join(vdir, f"._stats_tmp_{os.getpid()}")
         # Spark writes the tmp dir (type-exact for timestamps/decimals,
@@ -1157,9 +1217,7 @@ class ParquetWarehouse:
         is the O(new) claim, observable."""
         import pyarrow.parquet as pq
 
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
+        v = self._snapshot(table, version)
         vdir = os.path.join(self.table_path(table), v)
         donor = None
         # newest manifest wins, the target version's own included — a
@@ -1193,39 +1251,23 @@ class ParquetWarehouse:
             except FileNotFoundError:
                 continue  # vacuumed since
             by_inode[(st.st_dev, st.st_ino)] = r
-        reused, new_by_member = [], {}
-        tdir = self.table_path(table)
-        members = self._manifest_members(table, v)
+        reused, new_files = [], []
         for f in self.data_files(table, v):
             st = os.stat(f)
             prior = by_inode.get((st.st_dev, st.st_ino))
             if prior is not None:
                 reused.append({**prior, "file_path": os.path.abspath(f)})
-                continue
-            member = next(
-                m
-                for m in members
-                if os.path.abspath(f).startswith(
-                    os.path.abspath(os.path.join(tdir, m)) + os.sep
-                )
-            )
-            new_by_member.setdefault(member, []).append(f)
+            else:
+                new_files.append(f)
         computed = []
-        if new_by_member:
-            parts = []
-            for m, files in new_by_member.items():
-                base = os.path.abspath(os.path.join(tdir, m))
-                df = self.spark.read.option("basePath", base).parquet(*files)
-                present = [c for c in {*cols, *bloom_cols} if c in df.columns]
-                parts.append(
-                    df.select(
-                        F.col("_metadata.file_path").alias("file_path"),
-                        *present,
-                    )
+        if new_files:
+            rows = _union_by_name(
+                df.select(
+                    F.col("_metadata.file_path").alias("file_path"),
+                    *[c for c in {*cols, *bloom_cols} if c in df.columns],
                 )
-            rows = parts[0]
-            for p in parts[1:]:
-                rows = rows.unionByName(p, allowMissingColumns=True)
+                for _, df in self._member_frames(table, v, new_files)
+            )
             stats = _stats_of_rows(
                 rows, cols, bloom_cols, bloom_bits, bloom_hashes
             )
@@ -1274,9 +1316,7 @@ class ParquetWarehouse:
         semantics); the residual filter owns row truth."""
         ranges = ranges or {}
         equals = equals or {}
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
+        v = self._snapshot(table, version)
         if not ranges and not equals:
             raise ValueError(
                 f"skip_files({table!r}): no predicate — pass ranges and/or "
@@ -1434,9 +1474,7 @@ class ParquetWarehouse:
         thousands before Spark plans a single task."""
         ranges = ranges or {}
         equals = equals or {}
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
+        v = self._snapshot(table, version)
         pred = None
         for c, (lo, hi) in ranges.items():
             for bound, op in ((lo, "ge"), (hi, "le")):
@@ -1448,21 +1486,12 @@ class ParquetWarehouse:
             vals = list(val) if isinstance(val, (list, tuple, set)) else [val]
             e = F.col(c).isin(vals)
             pred = e if pred is None else pred & e
-        files = set(self.skip_files(table, ranges, v, equals=equals))
+        files = self.skip_files(table, ranges, v, equals=equals)
         if not files:
             return self.read(table, v).where(pred).limit(0)
-        parts = []
-        for m in self._manifest_members(table, v):
-            base = os.path.abspath(os.path.join(self.table_path(table), m))
-            mine = [f for f in sorted(files) if f.startswith(base + os.sep)]
-            if mine:
-                parts.append(
-                    self.spark.read.option("basePath", base).parquet(*mine)
-                )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out.where(pred)
+        return _union_by_name(
+            df for _, df in self._member_frames(table, v, files)
+        ).where(pred)
 
     def compact(
         self,
@@ -1488,65 +1517,27 @@ class ParquetWarehouse:
         applies within each partition's files.
         """
         with self._write_lock(table):
-            if partition_by is None:
-                # compact collapses the manifest chain — the one write the
-                # append-inheritance comment warns about: it MUST keep the
-                # live layout unless the caller explicitly changes it
-                cur = self._latest_version(table)
-                partition_by = self._layout(table, cur) if cur else ()
+            partition_by = self._target_layout(table, partition_by)
             df = self.read(table)
             spec = self._cluster_spec(table)
-            if spec and spec[0] == "zorder":
-                from ..functions.zorder import with_zorder_key
-
-                df = with_zorder_key(df, spec[1], scaler=spec[2])
-                if partition_by:
-                    df = df.repartition(
-                        *[F.col(c) for c in partition_by]
-                    ).sortWithinPartitions("_zorder")
-                else:
-                    total = sum(
-                        os.path.getsize(f) for f in self.data_files(table)
-                    )
-                    n = max(1, -(-total // target_file_bytes))
-                    df = df.repartitionByRange(
-                        n, F.col("_zorder")
-                    ).sortWithinPartitions("_zorder")
-                df = df.drop("_zorder")
-            elif spec and spec[0] == "cluster":
-                ccols = [F.col(c) for c in spec[1]]
-                if partition_by:
-                    df = df.repartition(
-                        *[F.col(c) for c in partition_by]
-                    ).sortWithinPartitions(*spec[1])
-                else:
-                    total = sum(
-                        os.path.getsize(f) for f in self.data_files(table)
-                    )
-                    n = max(1, -(-total // target_file_bytes))
-                    df = df.repartitionByRange(n, *ccols).sortWithinPartitions(
-                        *spec[1]
-                    )
-            elif partition_by:
-                df = df.repartition(*[F.col(c) for c in partition_by])
-            else:
-                # size the file count from actual bytes — only needed on
-                # this branch; stat-walking a large snapshot while
-                # holding the writer lock is not free
+            n = None
+            if not partition_by:
+                # size the file count from actual bytes — a partitioned
+                # table gets one file set per partition instead, and
+                # stat-walking a large snapshot while holding the
+                # writer lock is not free
                 total = sum(os.path.getsize(f) for f in self.data_files(table))
                 n = max(1, -(-total // target_file_bytes))  # ceil div
+            if spec:
+                df = _cluster_layout(df, partition_by, spec, n)
+            elif partition_by:
+                df = _colocated(df, partition_by)
+            else:
                 df = df.repartition(n)
             version = self._write_snapshot(df, table, partition_by)
             if spec:
                 # carry the intent forward so the NEXT compact sees it
-                kind, cols, scaler = spec
-                self._record_cluster(
-                    table,
-                    version,
-                    cols if kind == "cluster" else (),
-                    cols if kind == "zorder" else (),
-                    scaler,
-                )
+                self._record_cluster(table, version, spec)
             self._commit(table, version)
 
     def maintain_table(
@@ -1725,10 +1716,14 @@ class ParquetWarehouse:
         version fail loudly on next read rather than seeing partial
         data.
         """
+        if keep_last < 0:
+            raise ValueError(f"vacuum({table!r}): keep_last must be >= 0")
         current = self._latest_version(table)
         tdir = self.table_path(table)
         versions = self.versions(table)
-        keep = set(versions[-keep_last:]) | ({current} if current else set())
+        # versions[-0:] is the whole list, not none of it
+        newest = versions[-keep_last:] if keep_last else []
+        keep = set(newest) | ({current} if current else set())
         referenced: set[str] = set()
         for v in keep:
             referenced.update(self._manifest_members(table, v))

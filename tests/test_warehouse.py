@@ -477,3 +477,114 @@ def test_build_memo_put_is_bounded():
     assert len(memo) == X._MEMO_CAP
     # oldest insertions evicted first
     assert ("k", 0) not in memo and ("k", X._MEMO_CAP + 2) in memo
+
+
+_EMPTY_SCHEMA = "id long, p int, v string"
+
+
+def _empty_write_overwrite(spark, wh, empty):
+    wh.overwrite(empty, "t", partition_by=("p",))
+
+
+def _empty_write_append(spark, wh, empty):
+    wh.append(empty, "t", partition_by=("p",))
+
+
+def _empty_write_merge(spark, wh, empty):
+    wh.merge(empty, "t", keys=("p", "id"), partition_by=("p",))
+
+
+def _empty_write_delete(spark, wh, empty):
+    rows = [(0, 0, "a"), (1, 1, "b")]
+    wh.overwrite(spark.createDataFrame(rows, _EMPTY_SCHEMA), "t", partition_by=("p",))
+    assert wh.delete_where("t", "id >= 0") == 2
+
+
+@pytest.mark.parametrize(
+    "write",
+    [_empty_write_overwrite, _empty_write_append, _empty_write_merge, _empty_write_delete],
+    ids=["overwrite", "append", "merge", "delete_where"],
+)
+def test_empty_partitioned_write_leaves_readable_snapshot(spark, wh, write):
+    """A partitioned write of zero rows makes Spark emit no parquet file;
+    the committed snapshot must still read as zero rows with the frame's
+    columns, and later appends must land."""
+    empty = spark.createDataFrame([], _EMPTY_SCHEMA)
+    write(spark, wh, empty)
+    got = wh.read("t")
+    assert got.count() == 0
+    assert set(got.columns) == {"id", "p", "v"}
+    wh.append(spark.createDataFrame([(7, 1, "x")], _EMPTY_SCHEMA), "t")
+    assert [tuple(r) for r in wh.read("t").select("id", "p", "v").collect()] == [
+        (7, 1, "x")
+    ]
+
+
+def test_vacuum_keep_last_zero_keeps_only_live_snapshot(spark, wh):
+    for i in range(3):
+        wh.overwrite(_df(spark, [(f"S{i}", "t1", 1.0)]), "t")  # v1..v3
+    wh.append(_df(spark, [("D", "t2", 2.0)]), "t")  # v4 -> [v3, v4]
+    with pytest.raises(ValueError, match="keep_last"):
+        wh.vacuum("t", keep_last=-1)
+    assert len(wh.versions("t")) == 4
+    wh.vacuum("t", keep_last=0)
+    # the pointer's version and the member it references, nothing else
+    assert wh.versions("t") == ["v000003", "v000004"]
+    assert {r.stock for r in wh.read("t").collect()} == {"S2", "D"}
+
+
+def _pruned_merge(spark, wh, table):
+    batch = spark.createDataFrame(
+        [(0, 0, "NEW"), (99, 0, "NEW")], "id long, p int, val string"
+    )
+    wh.merge(batch, table, keys=("p", "id"))
+
+
+def _pruned_delete(spark, wh, table):
+    assert wh.delete_where(table, "id IN (0, 3)") == 1
+
+
+@pytest.mark.parametrize(
+    "rewrite", [_pruned_merge, _pruned_delete], ids=["merge", "delete_where"]
+)
+def test_pruned_rewrite_links_untouched_partitions(spark, wh, rewrite):
+    """merge and delete_where share one partition-pruned rewrite: only the
+    touched partition (p=0) is written, the others carry over as
+    hardlinks of the parent version's files, and the rows equal the same
+    operation on an unpartitioned copy. The base is a partitioned
+    clustered overwrite, which writes one sorted file per partition."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    base = spark.createDataFrame(
+        [(i, i % 3, f"v{i}") for i in range(24)], "id long, p int, val string"
+    )
+    wh.overwrite(base, "t", partition_by=("p",), cluster_by=("id",), n_files=4)
+    wh.overwrite(base, "u")
+
+    def by_part(version=None):
+        out: dict[str, list[str]] = {}
+        for f in wh.data_files("t", version):
+            out.setdefault(os.path.basename(os.path.dirname(f)), []).append(f)
+        return out
+
+    before = by_part()
+    assert sorted(before) == ["p=0", "p=1", "p=2"]
+    for files in before.values():
+        assert len(files) == 1
+        ids = pq.read_table(files[0], columns=["id"]).column("id").to_pylist()
+        assert ids == sorted(ids)
+
+    rewrite(spark, wh, "t")
+    rewrite(spark, wh, "u")
+
+    after = by_part()
+    inodes = lambda fs: {os.stat(f).st_ino for f in fs}  # noqa: E731
+    for p in ("p=1", "p=2"):
+        assert inodes(after[p]) == inodes(before[p])
+    assert after["p=0"] and not inodes(after["p=0"]) & inodes(before["p=0"])
+    rows = lambda t: sorted(  # noqa: E731
+        tuple(r) for r in wh.read(t).select("id", "p", "val").collect()
+    )
+    assert rows("t") == rows("u")

@@ -27,6 +27,7 @@ import json
 import os
 import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -128,13 +129,15 @@ def main() -> None:
     args = sys.argv[1:]
     delete_mode = "--delete" in args
     scales = [int(a) for a in args if a != "--delete"] or [1, 2, 4, 8]
-    root = "/tmp/soak_skipping"
-    shutil.rmtree(root, ignore_errors=True)
-    spark = get_spark("soak_skipping")
-    fn = soak_delete if delete_mode else soak_scale
-    for s in scales:
-        print(json.dumps(fn(spark, root, s)), flush=True)
-    shutil.rmtree(root, ignore_errors=True)
+    # a fresh root per run, so concurrent runs never share tables
+    root = tempfile.mkdtemp(prefix="soak_skipping_")
+    try:
+        spark = get_spark("soak_skipping")
+        fn = soak_delete if delete_mode else soak_scale
+        for s in scales:
+            print(json.dumps(fn(spark, root, s)), flush=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 if __name__ == "__main__":
