@@ -5,11 +5,7 @@ family (band-index dedup, IVF ANN, BM25 postings, n-gram LM state).
 At 100 TB the whitening/projection model is refit as new batches are
 accepted, and refitting must not re-scan history: PCA's sufficient
 statistics (count, column sum, Gram matrix) are EXACTLY additive, so
-each accepted batch's moments land in their own content-addressed
-epoch partition (the same exactly-once-under-at-least-once epoch-log
-discipline as lm_state / contamination.ingest_scrub_batch: a
-redelivered batch derives the identical epoch and rewrites the
-identical partition — a no-op with no read-modify-write crash window),
+each accepted batch's moments are an epoch log (operators/epoch_log.py)
 and the combined state is a pure epoch-sum read feeding the same
 driver-side eigensolve ``fit_pca`` uses.
 
@@ -35,7 +31,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .contamination import _content_epoch
+from . import epoch_log
 from .pca import suffstats_rows
 
 
@@ -67,47 +63,34 @@ def ingest_pca_batch(
     vec_col: str = "embedding",
     dim: int = 64,
 ) -> str:
-    """Fold one accepted batch's moments into the persisted state.
-    Returns the content-addressed epoch id. Replay idempotence is
-    STRUCTURAL: a redelivered batch derives the identical epoch, which
-    is found already present and skipped before any moment is computed
-    — the state bytes are untouched, so idempotence never depends on
-    bit-identical recomputation of shuffled double sums (Spark's
-    partial-agg merge order is not deterministic; a rewrite could
-    legally differ in the last ULP). Batches must partition the
-    accepted corpus by ``id_col`` (append-only ids), the standard
-    epoch-log mergeability contract; empty batches are rejected loudly
-    (an empty frame has no content address and no moments — the count
-    rides the epoch string, so the check is free).
-
-    Each ingest costs ONE suffstats pass over the batch plus the
-    id-column scan the content address needs: the moment rows are
-    locally materialized before the merge so the write does not
-    re-aggregate. ``dim`` is stamped onto every state row; the read
-    side refuses a state whose epochs disagree on it."""
-    epoch = _content_epoch(batch, id_col)
-    if int(epoch.rsplit("n", 1)[-1]) == 0:
+    """Fold one accepted batch's moments into the persisted state:
+    one suffstats pass over the batch, written as a single epoch
+    append. Returns the content-addressed epoch id. A redelivered batch
+    is skipped before any moment is computed, so idempotence never
+    depends on bit-identical recomputation of shuffled double sums
+    (Spark's partial-agg merge order is not deterministic). Batches
+    must partition the accepted corpus by ``id_col`` (append-only
+    ids); empty batches are rejected loudly (no moments to add).
+    ``dim`` is stamped onto every state row; the read side refuses a
+    state whose epochs disagree on it."""
+    rows = _batch_moment_rows(batch, vec_col, dim).withColumn(
+        "_dim", F.lit(dim)
+    )
+    epoch = epoch_log.ingest(wh, batch, id_col, {table: rows})
+    if epoch_log.is_empty(epoch):
         raise ValueError("ingest_pca_batch: empty batch — nothing to ingest")
-    if wh.exists(table):
-        already = (
-            wh.read(table).filter(F.col("_epoch") == epoch).limit(1).count()
-        )
-        if already:
-            return epoch
-    from ..materialize import materialize
-
-    rows = materialize(
-        _batch_moment_rows(batch, vec_col, dim)
-        .withColumn("_epoch", F.lit(epoch))
-        .withColumn("_dim", F.lit(dim))
-    )
-    wh.merge(
-        rows,
-        table,
-        keys=("i", "_epoch"),
-        partition_by=("_epoch",),
-    )
     return epoch
+
+
+def _combine_moments(moments: DataFrame) -> DataFrame:
+    return moments.groupBy("_dim", "i").agg(F.sum("v").alias("v"))
+
+
+def compact_pca_state(wh, table: str = "pca_moments") -> None:
+    """Fold every epoch into one ``_epoch='base'`` partition
+    (:func:`epoch_log.fold`; per-dim sums, so the read's mixed-dim guard
+    still fires). Run at a DELIVERY BARRIER only."""
+    epoch_log.fold(wh, table, _combine_moments)
 
 
 def pca_moments_state(
@@ -120,28 +103,22 @@ def pca_moments_state(
     d*(d+1) + 1 rows — driver-sized by design, same as
     covariance_stats' own reduction."""
     try:
-        state = wh.read(table)
-    except FileNotFoundError as e:
-        raise ValueError(
-            f"pca_moments_state: state table {table!r} is empty or lacks "
-            "the count row — ingest at least one batch first"
-        ) from e
-    dims = [r._dim for r in state.select("_dim").distinct().collect()]
+        summed = sorted(
+            epoch_log.state(wh, table, _combine_moments).collect(),
+            key=lambda r: r.i,
+        )
+    except FileNotFoundError:
+        summed = []
+    dims = sorted({r._dim for r in summed})
     if dims and (len(dims) > 1 or dims[0] != dim):
         # a 32-dim epoch's i-range is a SUBSET of a 64-dim one, so mixed
         # ingests could otherwise pass the row-count shape check below
         # and silently pollute the covariance
         raise ValueError(
             f"pca_moments_state: state table {table!r} holds dim(s) "
-            f"{sorted(dims)}, read requested dim {dim} — wrong dim or a "
+            f"{dims}, read requested dim {dim} — wrong dim or a "
             "mixed-dim ingest"
         )
-    summed = (
-        state.groupBy("i")
-        .agg(F.sum("v").alias("v"))
-        .orderBy("i")
-        .collect()
-    )
     if not summed or summed[0].i != -1:
         raise ValueError(
             f"pca_moments_state: state table {table!r} is empty or lacks "

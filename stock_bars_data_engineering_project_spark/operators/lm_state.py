@@ -5,13 +5,10 @@ At 100 TB the surprisal gate scores incoming batches against a FIXED
 reference LM (a batch of correlated garbage must not normalize itself),
 and the reference model itself grows as new TRUSTED data is accepted.
 This module maintains that model incrementally: each accepted batch's
-unigram and bigram counts land in their own content-addressed epoch
-partition (the exactly-once-under-at-least-once epoch-log discipline of
-contamination.ingest_scrub_batch — a redelivered batch derives the
-identical epoch and rewrites the identical partition, a no-op, with no
-read-modify-write crash window), and the combined state is a pure
-epoch-sum read. Counts are exact integers, so the combined model equals
-a full recount of every accepted batch however deliveries were sliced.
+unigram and bigram counts are an epoch log (operators/epoch_log.py),
+and the combined state is a pure epoch-sum read. Counts are exact
+integers, so the combined model equals a full recount of every
+accepted batch however deliveries were sliced.
 
 Counts are stored RAW (no min_count prune): per-(bigram, epoch)
 singletons must keep voting — a bigram appearing once per batch across
@@ -30,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
-from .contamination import _content_epoch
+from . import epoch_log
 
 
 def _batch_lm_counts(
@@ -84,54 +81,17 @@ def ingest_lm_batch(
     content-addressed epoch id (a redelivery of the same batch lands
     the identical epoch — replay-idempotent by construction; pinned in
     tests). Batches must partition the accepted corpus by ``id_col``
-    (append-only ids), the same mergeability contract as
-    contamination.ingest_scrub_batch."""
+    (append-only ids), the epoch log's mergeability contract."""
     uni, bi = _batch_lm_counts(batch, id_col, text_col)
-    epoch = _content_epoch(batch, id_col)
-    # Epoch partitions are content-addressed, so a present partition is
-    # BY CONTRACT identical to what this batch would write (append-only
-    # ids, docs immutable under their id — the index-family contract).
-    # Present => skip; absent => APPEND the one new partition (O(batch)
-    # manifest commit). The previous keyed merge re-derived the same
-    # no-op at the cost of reading the target and anti-joining every
-    # epoch — O(state) jobs per ingest for a write that is O(batch) by
-    # construction (round-10 opt). The two appends target DIFFERENT
-    # tables and the crash-heal is order-independent (redelivery
-    # recomputes the same epoch and appends only the missing table's
-    # partition), so they run as overlapped jobs (guide §2.6,
-    # round-11 opt) instead of serializing two corpus-batch passes.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _append(df, table):
-        if not _epoch_present(wh, table, epoch):
-            wh.append(
-                df.withColumn("_epoch", F.lit(epoch)),
-                table,
-                partition_by=("_epoch",),
-            )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_uni = pool.submit(_append, uni, uni_table)
-        f_bi = pool.submit(_append, bi, bi_table)
-        f_uni.result()
-        f_bi.result()
-    return epoch
+    return epoch_log.ingest(wh, batch, id_col, {uni_table: uni, bi_table: bi})
 
 
-def _epoch_present(wh, table: str, epoch: str) -> bool:
-    """True iff the live snapshot already carries this epoch partition —
-    a pure manifest/directory probe (no Spark job): epoch ids are
-    filesystem-safe hex+count strings, so the hive segment is literal."""
-    import os
+def _combine_uni(uni: DataFrame) -> DataFrame:
+    return uni.groupBy("token").agg(F.sum("n").alias("n"))
 
-    if not wh.exists(table):
-        return False
-    seg = f"_epoch={epoch}"
-    v = wh._latest_version(table)
-    return any(
-        os.path.isdir(os.path.join(wh.table_path(table), m, seg))
-        for m in wh._manifest_members(table, v)
-    )
+
+def _combine_bi(bi: DataFrame) -> DataFrame:
+    return bi.groupBy("prev", "cur").agg(F.sum("n2").alias("n2"))
 
 
 def lm_state(
@@ -144,18 +104,9 @@ def lm_state(
     (prev, cur, n2) over every accepted epoch — feed straight into
     ``bigram_surprisal(batch, unigram_counts=uni, bigram_counts=bi)``.
     Pruning happens HERE (read time), on the summed counts."""
-    uni = (
-        wh.read(uni_table)
-        .groupBy("token")
-        .agg(F.sum("n").alias("n"))
-    )
-    bi = (
-        wh.read(bi_table)
-        .groupBy("prev", "cur")
-        .agg(F.sum("n2").alias("n2"))
-        .filter(F.col("n2") >= min_count)
-    )
-    return uni, bi
+    uni = epoch_log.state(wh, uni_table, _combine_uni)
+    bi = epoch_log.state(wh, bi_table, _combine_bi)
+    return uni, bi.filter(F.col("n2") >= min_count)
 
 
 def compact_lm_state(
@@ -163,19 +114,8 @@ def compact_lm_state(
     uni_table: str = "lm_unigrams",
     bi_table: str = "lm_bigrams",
 ) -> None:
-    """Fold every epoch into one ``_epoch='base'`` partition. Run at a
-    DELIVERY BARRIER only (every ingested batch acked upstream) — the
-    same operational constraint, for the same redelivery-double-count
-    reason, as contamination.compact_gram_state."""
-    from ..materialize import materialize
-
-    uni = materialize(
-        wh.read(uni_table).groupBy("token").agg(F.sum("n").alias("n"))
-    ).withColumn("_epoch", F.lit("base"))
-    wh.overwrite(uni, uni_table, partition_by=("_epoch",))
-    bi = materialize(
-        wh.read(bi_table)
-        .groupBy("prev", "cur")
-        .agg(F.sum("n2").alias("n2"))
-    ).withColumn("_epoch", F.lit("base"))
-    wh.overwrite(bi, bi_table, partition_by=("_epoch",))
+    """Fold every epoch into one ``_epoch='base'`` partition
+    (:func:`epoch_log.fold`). Run at a DELIVERY BARRIER only (every
+    ingested batch acked upstream)."""
+    epoch_log.fold(wh, uni_table, _combine_uni)
+    epoch_log.fold(wh, bi_table, _combine_bi)

@@ -94,9 +94,10 @@ def q_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     The `stream` arm delivers the SAME events as two parquet file waves
     through a real readStream + foreachBatch epoch-log fold
     (streaming/incremental.py rollup_maintenance_stream): each
-    micro-batch's increment lands via keyed merge in its own ``_epoch``
-    partition — replay rewrites the same partition, so at-least-once
-    delivery degrades to exactly-once state — and the read-time combine
+    micro-batch's increment is appended as its own ``_epoch`` partition
+    of the epoch log (operators/epoch_log.py) — a replayed epoch is
+    found present and skipped, so at-least-once delivery degrades to
+    exactly-once state — and the read-time combine
     over epochs must equal the identical direct recompute the batch arm
     is gated by. Replayed-epoch no-ops and compaction invariance stay
     pinned in tests/test_streaming.py::test_rollup_maintenance_stream_epoch_log."""
@@ -142,8 +143,8 @@ def q_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stream arm: the SAME events delivered as two parquet file waves
     # through a real readStream + foreachBatch epoch-log fold
-    # (streaming/incremental.py) — each micro-batch's increment lands in
-    # its own _epoch partition (replay-idempotent by construction), and
+    # (streaming/incremental.py) — each micro-batch's increment is
+    # appended as its own _epoch partition (a replay is skipped), and
     # the read-time combine over epochs must equal the direct oracle
     # recompute, exactly like the batch fold
     wh = scratch_warehouse(spark, "rollup_stream_rows")
@@ -390,7 +391,7 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     # accumulate with addition-order rounding, so this is the lm_state
     # "combined ≡ recount" gate with FP-law flags in place of integer
     # hash identity) — and a redelivered batch must leave the state
-    # bit-identical (the epoch rewrite is a no-op by content address).
+    # bit-identical (its content-addressed epoch is present, so skipped).
     # The recount is one extra scan of the embeddings table — fine
     # here: this suite is a verification surface (the sketch-arm
     # precedent), and a production refit reads ONLY the state.

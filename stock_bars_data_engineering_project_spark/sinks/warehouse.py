@@ -191,7 +191,25 @@ def _partition_values_pred(parts: list[tuple], partition_by) -> "Column":
 def _union_by_name(frames) -> DataFrame:
     """One frame from manifest members' frames: unionByName with
     ``allowMissingColumns``, so drift-appended members align the way
-    ``append(allow_schema_drift=True)`` aligned them at write time."""
+    ``append(allow_schema_drift=True)`` aligned them at write time.
+
+    A hive partition column's type is inferred from each member's dir
+    names, so one member can read it as string ('base') and another as
+    int ('7'). Such a column aligns as string: the union would otherwise
+    cast the string side to a number and fail on a non-numeric value."""
+    frames = list(frames)
+    types: dict[str, set[str]] = {}
+    for df in frames if len(frames) > 1 else ():
+        for c, t in df.dtypes:
+            types.setdefault(c, set()).add(t)
+    as_str = [c for c, ts in types.items() if "string" in ts and len(ts) > 1]
+    if as_str:
+        frames = [
+            df.withColumns(
+                {c: F.col(c).cast("string") for c in as_str if c in df.columns}
+            )
+            for df in frames
+        ]
     return functools.reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
     )

@@ -130,6 +130,39 @@ def fetch_bars_rest(
         params["page_token"] = token
 
 
+# wire-shape fields of one REST bar, in BARS_SCHEMA order after symbol
+_WIRE_FIELDS = ("c", "h", "l", "n", "o", "t", "v", "vw")
+
+
+def _rest_rows(symbol: str, start: str, end: str) -> Iterator[tuple]:
+    """One symbol's live REST bars as BARS_SCHEMA rows."""
+    for b in fetch_bars_rest([symbol], start, end).get(symbol, []):
+        yield (symbol, *(b.get(f) for f in _WIRE_FIELDS))
+
+
+def _parse_options(reader, options) -> None:
+    """The option contract the batch and stream readers share:
+    ``symbols`` (comma list), ``start``/``end`` (ISO dates; no ``end``
+    => "up to now", deterministically 30 days past start, mirroring the
+    reference's open-ended incremental extract), ``seed``, and ``live``
+    (``true`` fetches over REST, anything else replays the synthetic
+    walk — never silently ignored, or a user who configured live
+    ingestion would get a fake walk with an identical schema)."""
+    reader.symbols = [
+        s.strip()
+        for s in options.get("symbols", DEFAULT_SYMBOLS).split(",")
+        if s.strip()
+    ]
+    reader.start = _dt.date.fromisoformat(options.get("start", "2025-09-01"))
+    reader.end = (
+        _dt.date.fromisoformat(options["end"])
+        if "end" in options
+        else reader.start + _dt.timedelta(days=30)
+    )
+    reader.seed = int(options.get("seed", "42"))
+    reader.live = options.get("live", "false").lower() == "true"
+
+
 class _SymbolPartition(InputPartition):
     def __init__(self, symbol: str):
         self.symbol = symbol
@@ -155,21 +188,7 @@ class StockBarsDataSource(DataSource):
 
 class StockBarsReader(DataSourceReader):
     def __init__(self, options):
-        self.symbols = [
-            s.strip()
-            for s in options.get("symbols", DEFAULT_SYMBOLS).split(",")
-            if s.strip()
-        ]
-        self.start = _dt.date.fromisoformat(options.get("start", "2025-09-01"))
-        # no explicit end => "up to now": deterministically 30 days past
-        # start (mirrors the reference's open-ended incremental extract)
-        self.end = (
-            _dt.date.fromisoformat(options["end"])
-            if "end" in options
-            else self.start + _dt.timedelta(days=30)
-        )
-        self.seed = int(options.get("seed", "42"))
-        self.live = options.get("live", "false").lower() == "true"
+        _parse_options(self, options)
 
     def partitions(self):
         # one partition per symbol: extraction scales with the symbol count
@@ -177,21 +196,9 @@ class StockBarsReader(DataSourceReader):
 
     def read(self, partition: _SymbolPartition) -> Iterator[tuple]:
         if self.live:
-            bars = fetch_bars_rest(
-                [partition.symbol], self.start.isoformat(), self.end.isoformat()
-            ).get(partition.symbol, [])
-            for b in bars:
-                yield (
-                    partition.symbol,
-                    b.get("c"),
-                    b.get("h"),
-                    b.get("l"),
-                    b.get("n"),
-                    b.get("o"),
-                    b.get("t"),
-                    b.get("v"),
-                    b.get("vw"),
-                )
+            yield from _rest_rows(
+                partition.symbol, self.start.isoformat(), self.end.isoformat()
+            )
         else:
             yield from synth_bars(partition.symbol, self.start, self.end, self.seed)
 
@@ -219,25 +226,8 @@ class StockBarsStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, options):
-        self.symbols = [
-            s.strip()
-            for s in options.get("symbols", DEFAULT_SYMBOLS).split(",")
-            if s.strip()
-        ]
-        self.start = _dt.date.fromisoformat(options.get("start", "2025-09-01"))
-        self.end = (
-            _dt.date.fromisoformat(options["end"])
-            if "end" in options
-            else self.start + _dt.timedelta(days=30)
-        )
-        self.seed = int(options.get("seed", "42"))
+        _parse_options(self, options)
         self.batch_days = int(options.get("batch_days", "7"))
-        # same option contract as the batch reader: live=true polls the
-        # REST source per micro-batch range (import-gated; deterministic
-        # synth fallback), anything else replays the synthetic walk.
-        # Silently ignoring the option would hand a user who configured
-        # live ingestion a fake random walk with an identical schema.
-        self.live = options.get("live", "false").lower() == "true"
         self._cursor = self.start - _dt.timedelta(days=1)
 
     def initialOffset(self) -> dict:
@@ -273,21 +263,7 @@ class StockBarsStreamReader(DataSourceStreamReader):
         if lo > hi:
             return
         if self.live:
-            bars = fetch_bars_rest(
-                [partition.symbol], lo.isoformat(), hi.isoformat()
-            ).get(partition.symbol, [])
-            for b in bars:
-                yield (
-                    partition.symbol,
-                    b.get("c"),
-                    b.get("h"),
-                    b.get("l"),
-                    b.get("n"),
-                    b.get("o"),
-                    b.get("t"),
-                    b.get("v"),
-                    b.get("vw"),
-                )
+            yield from _rest_rows(partition.symbol, lo.isoformat(), hi.isoformat())
             return
         # Replay the walk from series start and slice the batch's range:
         # the geometric walk chains day-to-day, so starting a fresh walk

@@ -7,14 +7,16 @@ micro-batch as a MERGE into the warehouse (idempotent under replay —
 exactly the reference's Q9 healing property, but with the checkpointing,
 offset tracking, and restart semantics supplied by the engine instead of
 hand-rolled SQL). Structured Streaming's checkpointLocation replaces the
-reference's ``check_points`` table.
+reference's ``check_points`` table. Additive state (the rollup stream,
+the PCA-moment drain) is kept as an epoch log (operators/epoch_log.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from ..operators import epoch_log
+from ..operators.rollup import combine_state, rollup_increment
 from ..sinks.warehouse import ParquetWarehouse
 
 
@@ -82,60 +84,56 @@ def rollup_maintenance_stream(
     available_now: bool = True,
 ):
     """Maintain a mergeable rollup (operators/rollup.py, optionally
-    sketch-extended) under Structured Streaming as an EPOCH LOG.
+    sketch-extended) under Structured Streaming as an epoch log
+    (operators/epoch_log.py) whose epoch ids are the stream's batch ids.
 
-    Each micro-batch folds to a per-group increment tagged with its
-    epoch id and lands via keyed merge into its own ``_epoch``
-    partition. Idempotence under replay is structural: a re-delivered
-    batch recomputes the identical increment and rewrites the SAME
-    partition, so the at-least-once delivery of ``foreachBatch``
-    degrades to exactly-once state — no read-modify-write of prior
-    state inside the hot path, which would double-fold on replay and
-    serialize every batch behind a full-table rewrite. Reading the
-    rollup is a combine over epochs (``read_rollup_state``), and
-    ``compact_rollup_state`` bounds that read amplification offline.
+    Each non-empty micro-batch folds to a per-group increment appended
+    as its epoch's partition; a replayed batch finds its epoch present
+    and writes nothing, so the at-least-once delivery of
+    ``foreachBatch`` degrades to exactly-once state with no
+    read-modify-write of prior state in the hot path. Batch ids are
+    unique only within one checkpoint: feed each table from ONE
+    checkpointed stream, or two streams' epochs collide and one is
+    skipped. Reading the rollup is a combine over epochs
+    (``read_rollup_state``); ``compact_rollup_state`` bounds that read
+    amplification offline.
     """
-    from ..operators.rollup import rollup_increment
 
     def _apply(batch: DataFrame, epoch_id: int) -> None:
-        inc = rollup_increment(
-            batch, keys=keys, distinct_col=distinct_col
-        ).withColumn("_epoch", F.lit(int(epoch_id)))
-        wh.merge(
-            inc,
-            table,
-            keys=(*keys, "day", "_epoch"),
-            partition_by=("_epoch",),
-        )
+        _ingest_rollup_epoch(wh, batch, table, epoch_id, keys, distinct_col)
 
     return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)
+
+
+def _ingest_rollup_epoch(
+    wh: ParquetWarehouse,
+    batch: DataFrame,
+    table: str,
+    epoch_id: int,
+    keys: tuple[str, ...],
+    distinct_col: str | None,
+) -> None:
+    """One rollup-stream micro-batch: skip it when empty, else append
+    its increment as epoch ``epoch_id``."""
+    if batch.isEmpty():
+        return
+    inc = rollup_increment(batch, keys=keys, distinct_col=distinct_col)
+    epoch_log.append(wh, table, inc, int(epoch_id))
 
 
 def read_rollup_state(wh: ParquetWarehouse, table: str) -> DataFrame:
     """Read-time combine of the epoch log -> one state row per group.
     O(epochs) rows per group pre-combine; run ``compact_rollup_state``
     on a schedule to keep that bounded."""
-    from ..operators.rollup import combine_state
-
-    return combine_state(wh.read(table).drop("_epoch"))
-
-
-# compacted history lands in a partition no streaming epoch can claim
-# (epoch ids are non-negative), so a replayed in-flight epoch can only
-# ever rewrite its OWN partition, never the folded base
-_BASE_EPOCH = -1
+    return epoch_log.state(wh, table, combine_state)
 
 
 def compact_rollup_state(wh: ParquetWarehouse, table: str) -> None:
-    """Fold all epoch partitions into the ``_epoch = -1`` base
-    partition. Run while the stream is stopped (or between triggers):
-    the one replayable epoch is the in-flight batch, which by
-    definition has not been folded yet, and a replay after compaction
-    rewrites only its own partition — the base is never an epoch id."""
-    state = read_rollup_state(wh, table).withColumn(
-        "_epoch", F.lit(_BASE_EPOCH)
-    )
-    wh.overwrite(state, table, partition_by=("_epoch",))
+    """Fold all epoch partitions into the ``_epoch='base'`` partition
+    (:func:`epoch_log.fold`). Run while the stream is stopped (or
+    between triggers): the one replayable epoch is the in-flight batch,
+    which has not been folded yet."""
+    epoch_log.fold(wh, table, combine_state)
 
 
 def dedup_ingest_stream(
@@ -254,9 +252,9 @@ def pca_ingest_stream(
     Exactly-once composition, the dedup_ingest_stream argument: the
     file-source offset checkpoint gives at-least-once micro-batch
     delivery, and a replayed batch derives the identical content
-    address and rewrites the identical epoch partition — a bit-level
-    no-op. Moments are exactly additive, so ANY micro-batching of the
-    same files yields a combined state equal to the one-shot recount
+    address, finds that epoch present and writes nothing. Moments are
+    exactly additive, so ANY micro-batching of the same files yields a
+    combined state equal to the one-shot recount
     (n exactly; mean/covariance to addition-order rounding — the
     relative-1e-9 law the driver row flags).
 

@@ -136,3 +136,44 @@ def test_stream_restart_from_checkpoint_no_duplicates(spark, tmp_path):
         q2.stop()
     streamed = sorted(map(tuple, spark.read.parquet(out).collect()))
     assert streamed == batch  # exactly once: no missing, NO DUPLICATED days
+
+
+def test_readers_share_options_and_live_row_mapping(monkeypatch):
+    """Batch and stream readers parse the same options (defaults
+    included) and map a REST bar to the same wire-shape row. The fetch
+    is stubbed, so no credentials or network are involved."""
+    import datetime as dt
+
+    from stock_bars_data_engineering_project_spark.sources import bars_source as bs
+
+    bar = {"c": 1.5, "h": 2.0, "l": 1.0, "n": 7, "o": 1.2,
+           "t": "2025-09-02T04:00:00Z", "v": 100, "vw": 1.4}
+    calls = []
+
+    def fake_fetch(symbols, start, end):
+        calls.append((list(symbols), start, end))
+        return {symbols[0]: [bar]}
+
+    monkeypatch.setattr(bs, "fetch_bars_rest", fake_fetch)
+    opts = {"symbols": " AAPL, ,MSFT", "start": "2025-09-01",
+            "end": "2025-09-05", "seed": "7", "live": "TRUE"}
+
+    def parsed(r):
+        return r.symbols, r.start, r.end, r.seed, r.live
+
+    batch, stream = bs.StockBarsReader(opts), bs.StockBarsStreamReader(opts)
+    want = (["AAPL", "MSFT"], dt.date(2025, 9, 1), dt.date(2025, 9, 5), 7, True)
+    assert parsed(batch) == parsed(stream) == want
+    default = (bs.DEFAULT_SYMBOLS.split(","), dt.date(2025, 9, 1),
+               dt.date(2025, 10, 1), 42, False)
+    assert parsed(bs.StockBarsReader({})) == default
+    assert parsed(bs.StockBarsStreamReader({})) == default
+
+    row = ("AAPL", 1.5, 2.0, 1.0, 7, 1.2, "2025-09-02T04:00:00Z", 100, 1.4)
+    assert list(batch.read(bs._SymbolPartition("AAPL"))) == [row]
+    part = bs._RangePartition("AAPL", "2025-09-01", "2025-09-05")
+    assert list(stream.read(part)) == [row]
+    assert calls == [
+        (["AAPL"], "2025-09-01", "2025-09-05"),
+        (["AAPL"], "2025-09-02", "2025-09-05"),
+    ]

@@ -391,6 +391,7 @@ def test_rollup_maintenance_stream_epoch_log(spark, tmp_path):
         rollup_metrics,
     )
     from stock_bars_data_engineering_project_spark.streaming.incremental import (
+        _ingest_rollup_epoch,
         compact_rollup_state,
         read_rollup_state,
         rollup_maintenance_stream,
@@ -429,17 +430,14 @@ def test_rollup_maintenance_stream_epoch_log(spark, tmp_path):
     want = _rows(rollup_metrics(rollup_increment(events, distinct_col="event_id")))
     assert _rows(rollup_metrics(read_rollup_state(wh, "roll"))) == want
 
-    # replayed epoch: re-apply the last batch's increment at its epoch id
-    # (at-least-once delivery) -> rewrites the same partition, no change
+    # replayed epoch: re-deliver the last batch at its epoch id through
+    # the stream's own per-epoch ingest (at-least-once delivery) -> the
+    # epoch is present, nothing is written, no change
     epochs = [r["_epoch"] for r in wh.read("roll").select("_epoch").distinct().collect()]
     last = max(epochs)
-    inc = rollup_increment(second, keys=("user_id",), distinct_col="event_id")
-    wh.merge(
-        inc.withColumn("_epoch", F.lit(last)),
-        "roll",
-        keys=("user_id", "day", "_epoch"),
-        partition_by=("_epoch",),
-    )
+    versions = wh.versions("roll")
+    _ingest_rollup_epoch(wh, second, "roll", last, ("user_id",), "event_id")
+    assert wh.versions("roll") == versions
     assert _rows(rollup_metrics(read_rollup_state(wh, "roll"))) == want
 
     # compaction folds the epoch log into the base partition

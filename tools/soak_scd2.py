@@ -18,7 +18,9 @@ parquet dictionary/RLE encoding cannot flatten the history rewrite the
 way a constant-per-key payload would.
 
 Usage: python tools/soak_scd2.py [n_batches]    (parent; default 20)
-       python tools/soak_scd2.py --mode naive|store n  (child)
+       python tools/soak_scd2.py --mode naive|store n root  (child)
+Tables live under a fresh temporary root per run (removed at the end),
+so concurrent soaks never share or delete each other's tables.
 Prints one JSON line per (mode, batch) and a parent summary with
 early/tail per-batch means per mode for SCALING.md.
 """
@@ -30,12 +32,12 @@ import os
 import shutil
 import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_KEYS = 500_000
-WORK = "/tmp/soak_scd2"
 
 
 def batch_frame(spark, stamp: int):
@@ -68,7 +70,7 @@ def batch_frame(spark, stamp: int):
     return base.withColumn("payload", payload)
 
 
-def run_mode(mode: str, n_batches: int) -> None:
+def run_mode(mode: str, n_batches: int, work: str) -> None:
     from stock_bars_data_engineering_project_spark.operators.merge import (
         scd2_init,
         scd2_merge,
@@ -82,9 +84,7 @@ def run_mode(mode: str, n_batches: int) -> None:
     )
 
     spark = get_spark(f"soak-scd2-{mode}")
-    root = os.path.join(WORK, mode)
-    shutil.rmtree(root, ignore_errors=True)
-    wh = ParquetWarehouse(spark, root)
+    wh = ParquetWarehouse(spark, os.path.join(work, mode))
     store = Scd2Store(wh, "dim")
     times = []
     for stamp in range(1, n_batches + 1):
@@ -115,31 +115,35 @@ def run_mode(mode: str, n_batches: int) -> None:
 def main() -> None:
     if "--mode" in sys.argv:
         i = sys.argv.index("--mode")
-        run_mode(sys.argv[i + 1], int(sys.argv[i + 2]))
+        run_mode(sys.argv[i + 1], int(sys.argv[i + 2]), sys.argv[i + 3])
         return
 
     n_batches = int(sys.argv[1]) if len(sys.argv) > 1 else 20
-    shutil.rmtree(WORK, ignore_errors=True)
     results = {}
-    for mode in ("naive", "store"):
-        out = subprocess.run(
-            [
-                sys.executable,
-                os.path.abspath(__file__),
-                "--mode",
-                mode,
-                str(n_batches),
-            ],
-            capture_output=True,
-            text=True,
-            check=True,
-        ).stdout
-        for ln in out.splitlines():
-            if ln.startswith("{"):
-                print(ln, flush=True)
-                rec = json.loads(ln)
-                if "times" in rec:
-                    results[mode] = rec
+    work = tempfile.mkdtemp(prefix="soak_scd2_")
+    try:
+        for mode in ("naive", "store"):
+            out = subprocess.run(
+                [
+                    sys.executable,
+                    os.path.abspath(__file__),
+                    "--mode",
+                    mode,
+                    str(n_batches),
+                    work,
+                ],
+                capture_output=True,
+                text=True,
+                check=True,
+            ).stdout
+            for ln in out.splitlines():
+                if ln.startswith("{"):
+                    print(ln, flush=True)
+                    rec = json.loads(ln)
+                    if "times" in rec:
+                        results[mode] = rec
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
     summary = {}
     for mode, rec in results.items():
         ts = rec["times"]
@@ -154,7 +158,6 @@ def main() -> None:
             "final_rows": rec["final_rows"],
         }
     print(json.dumps({"summary": summary, "n_batches": n_batches}))
-    shutil.rmtree(WORK, ignore_errors=True)
 
 
 if __name__ == "__main__":
